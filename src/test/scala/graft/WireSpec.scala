@@ -12,9 +12,10 @@ import java.net.{HttpURLConnection, URL}
   */
 class WireSpec extends SparkSpec {
 
-  private def rpc(port: Int, method: String, params: Map[String, Any]): Map[Any, Any] = {
+  private def rpc(port: Int, method: String, params: Map[String, Any],
+      id: Long = 1L): Map[Any, Any] = {
     val req = Map("jsonrpc" -> "2.0", "method" -> method,
-      "params" -> Seq(params), "id" -> 1L)
+      "params" -> Seq(params), "id" -> id)
     val conn = new URL(s"http://127.0.0.1:$port/rpc")
       .openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("POST")
@@ -23,7 +24,7 @@ class WireSpec extends SparkSpec {
     conn.getOutputStream.write(MsgPack.encode(req))
     val bytes = conn.getInputStream.readAllBytes()
     val resp = MsgPack.decode(bytes).asInstanceOf[Map[Any, Any]]
-    assert(resp("jsonrpc") == "2.0" && resp("id") == 1L)
+    assert(resp("jsonrpc") == "2.0" && resp("id") == id)
     resp.get("error").foreach(e => fail(s"rpc error: $e"))
     resp("result").asInstanceOf[Map[Any, Any]]
   }
@@ -952,5 +953,88 @@ class WireSpec extends SparkSpec {
       srv.setQueryable(true)
       assert(beat()._1 == 200)
     } finally srv.stop()
+  }
+
+  test("keep-alive responses do not wait for the client's delayed ACK") {
+    // without TCP_NODELAY the body segment waits ~40 ms for the ACK of
+    // the header segment on every call; with it a loopback call takes
+    // a few ms
+    val cat = new BucketCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-nodelay").toString)
+    val srv = new RpcServer(spark, cat, port = 0)
+    srv.start()
+    try {
+      val port = srv.boundPort
+      def medianMs(call: => Unit): Double = {
+        val ms = (1 to 20).map { _ =>
+          val t0 = System.nanoTime()
+          call
+          (System.nanoTime() - t0) / 1e6
+        }.sorted
+        (ms(9) + ms(10)) / 2
+      }
+      val beat = medianMs {
+        val conn = new URL(s"http://127.0.0.1:$port/heartbeat")
+          .openConnection().asInstanceOf[HttpURLConnection]
+        val in = conn.getInputStream
+        in.readAllBytes()
+        in.close()
+      }
+      val list = medianMs {
+        assert(rpc(port, "DataService.ListSymbols", Map.empty)("Results") == Vector())
+      }
+      assert(beat < 20.0 && list < 20.0,
+        f"median round trips: /heartbeat $beat%.1f ms, ListSymbols $list%.1f ms")
+    } finally srv.stop()
+  }
+
+  test("every Spark job of an RPC runs in a job group named after its request id") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val cat = new BucketCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-jobgroup").toString)
+    val srv = new RpcServer(spark, cat, port = 0)
+    srv.start()
+    // job groups in listener order; markers run on this thread bracket
+    // the query's jobs, and the bus delivers events in order
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def marker(): Unit = {
+      sc.setJobGroup("wirespec-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    def markers: Int = groups.asScala.count(_ == "wirespec-marker")
+    sc.addSparkListener(listener)
+    try {
+      val port = srv.boundPort
+      val schema = StructType(Seq(
+        StructField("Epoch", LongType), StructField("Close", DoubleType)))
+      val ds = NumpyCodec.encode(schema, Seq("AAPL/1Min/JG" ->
+        (0 until 5).map(i => org.apache.spark.sql.Row(1590000000L + 60L * i, 1.0 + i))))
+      rpc(port, "DataService.Write", Map("requests" -> Seq(Map(
+        "dataset" -> ds, "is_variable_length" -> false))))
+      marker()
+      val q = rpc(port, "DataService.Query", Map("requests" -> Seq(Map(
+        "destination" -> "AAPL/1Min/JG", "limit_record_count" -> 2L,
+        "limit_from_start" -> false))), id = 4242L)
+      assert(q("responses").asInstanceOf[Seq[Any]].size == 1)
+      marker()
+      val deadline = System.currentTimeMillis() + 10000
+      while (markers < 2 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(markers == 2, "listener did not see both marker jobs")
+      val seen = groups.asScala.toSeq
+      val queryJobs = seen.drop(seen.indexOf("wirespec-marker") + 1)
+        .takeWhile(_ != "wirespec-marker")
+      assert(queryJobs.nonEmpty, "the query ran no Spark job")
+      assert(queryJobs.forall(_ == "rpc-4242"), s"job groups of the query: $queryJobs")
+    } finally {
+      sc.removeSparkListener(listener)
+      srv.stop()
+    }
   }
 }
