@@ -39,11 +39,6 @@ import scala.util.control.NonFatal
   * rewrite the (timeframe, year, sbucket) slices holding it instead of
   * unlinking a directory.
   *
-  * Legacy roots written by earlier versions (`symbol=S/timeframe=T/
-  * year=Y` directories, no `buckets=` meta token) stay fully readable
-  * and writable through the same API — the layout is fixed per group
-  * at creation, never mixed within one.
-  *
   * Record-type semantics (utils/io/datatypes.go:12-18):
   *  - FIXED  ⇒ at most one row per (symbol, timeframe, epoch): writes
   *    upsert keyed on epoch — the reference's slot overwrite.
@@ -51,9 +46,9 @@ import scala.util.control.NonFatal
   *    unsorted writes read back time-ordered (executor/sort.go:11-50).
   *
   * At cluster scale the upsert path rewrites only the
-  * (symbol, timeframe, year) partitions present in the batch:
+  * (timeframe, year, sbucket) partitions present in the batch:
   * rewrite cost is bounded by touched partitions, not table size.
-  * Within a bucketed partition, steady FORWARD ingest is cheaper
+  * Within a partition, steady FORWARD ingest is cheaper
   * still: the manifest tracks each partition's max Epoch, and a batch
   * whose min epoch strictly exceeds it APPENDS a new file without
   * reading or rewriting the partition at all (no key can collide) —
@@ -561,20 +556,17 @@ class BucketCatalog(spark: SparkSession, root: String,
   private val kindCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
-  /** Create an attribute group. `symbolBuckets` fixes the physical
-    * layout forever: N > 0 ⇒ symbol-bucketed files (see class doc;
-    * size it O(write parallelism) — more buckets = more files per
-    * commit but finer destroy/delete rewrites); 0 ⇒ the legacy
-    * per-symbol directory layout (only for compatibility tests).
+  /** Create an attribute group with [[DefaultSymbolBuckets]] symbol
+    * buckets (see class doc). The count is recorded in the group meta
+    * as `buckets=N` and fixed for the group's lifetime.
     */
-  def create(tbk: TimeBucketKey, schema: StructType, isVariable: Boolean,
-      symbolBuckets: Int = DefaultSymbolBuckets): Unit =
+  def create(tbk: TimeBucketKey, schema: StructType, isVariable: Boolean): Unit =
     mutate(tbk.attGroup) {
       val meta = new Path(agPath(tbk.attGroup), MetaFile)
       if (!fs.exists(meta)) {
         val out = fs.create(meta, true)
         val kind = (if (isVariable) "variable" else "fixed") +
-          (if (symbolBuckets > 0) s" buckets=$symbolBuckets" else "")
+          s" buckets=$DefaultSymbolBuckets"
         // schema as JSON: unlike DDL it round-trips field metadata
         // (char/varchar length caps for STRING16 enforcement)
         out.write(s"$kind\n${schema.json}\n".getBytes("UTF-8"))
@@ -584,12 +576,10 @@ class BucketCatalog(spark: SparkSession, root: String,
 
   def isVariable(attGroup: String): Boolean = readMeta(attGroup)._1
 
-  /** Some(N) ⇒ symbol-bucketed layout with N buckets; None ⇒ legacy
-    * per-symbol directories.
-    */
-  def layoutBuckets(attGroup: String): Option[Int] = readMeta(attGroup)._3
+  /** The group's symbol-bucket count N (its meta's `buckets=N`). */
+  def layoutBuckets(attGroup: String): Int = readMeta(attGroup)._3
 
-  private def readMeta(attGroup: String): (Boolean, StructType, Option[Int]) = {
+  private def readMeta(attGroup: String): (Boolean, StructType, Int) = {
     val meta = new Path(agPath(attGroup), MetaFile)
     val in = fs.open(meta)
     val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -600,7 +590,9 @@ class BucketCatalog(spark: SparkSession, root: String,
     val tokens = lines(0).trim.split("\\s+")
     val buckets = tokens.collectFirst {
       case t if t.startsWith("buckets=") => t.stripPrefix("buckets=").toInt
-    }
+    }.getOrElse(throw new IllegalStateException(
+      s"group meta $meta has no buckets= token; the catalog reads only " +
+        "the symbol-bucketed layout"))
     (tokens(0) == "variable", schema, buckets)
   }
 
@@ -689,7 +681,7 @@ class BucketCatalog(spark: SparkSession, root: String,
         create(TimeBucketKey("__infer", "__multi", attGroup), inferred,
           isVariable = df.columns.contains(Uda.NanosCol))
       }
-      val (variable, declared, buckets) = readMeta(attGroup)
+      val (variable, declared, nb) = readMeta(attGroup)
       val keyed0 = coerce(df, declared)
         .withColumn("year", year(timestamp_seconds(col(Uda.EpochCol))))
       val keyed1 =
@@ -716,79 +708,62 @@ class BucketCatalog(spark: SparkSession, root: String,
           .agg(max_by(struct(allCols.map(col): _*),
             struct(valCols.map(col): _*)).as("__row"))
           .select(allCols.map(c => col(s"__row.$c").as(c)): _*)
-      buckets match {
-        case Some(nb) =>
-          val keyed = keyedU.withColumn("sbucket", sbucketCol(nb))
-          // ONE metadata pass over the batch: per-(symbol, timeframe,
-          // year) min Epoch — bounded by the symbol cardinality the
-          // manifest's bucket registry lists anyway — yields the
-          // logical buckets, the touched physical partitions, and the
-          // batch's min epoch per partition for append routing.
-          val touched = keyed1.groupBy("symbol", "timeframe", "year")
-            .agg(min(col(Uda.EpochCol)).as("__mn"))
-            .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3)))
-          val logical = touched.map { case (s, t, _, _) => s"symbol=$s/timeframe=$t" }.toSet
-          val batchMin: Map[String, Long] = touched
-            .map { case (s, t, y, mn) => (s"timeframe=$t/year=$y/sbucket=${sbucketOf(s, nb)}", mn) }
-            .groupBy(_._1).map { case (p, ms) => p -> ms.map(_._2).min }
-          // APPEND fast path per partition: when the batch's min epoch
-          // strictly exceeds the partition's manifest-tracked max, no
-          // key can collide — the batch's rows land as a NEW file and
-          // the partition's existing files are never read or
-          // rewritten. Steady forward ingest (the 1-minute-bar
-          // cadence) is then O(batch) per commit instead of
-          // O(accumulated partition) — the merge-rewrite
-          // amplification the reference avoids with in-place year
-          // files. Late/overlapping data, unknown ranges (pre-feature
-          // manifests, post-delete partitions), and partitions whose
-          // file count reached CompactAtFiles take the merge path,
-          // which rewrites the partition into fresh files (compaction
-          // and range healing in the same commit).
-          val stored = resolveCurrent(attGroup)
-            .map(r => (r._4, r._2)).getOrElse((Map.empty[String, Long], Nil))
-          val fileCount: Map[String, Int] = stored._2
-            .groupBy(f => f.substring(0, f.lastIndexOf('/')))
-            .map { case (p, fsq) => p -> fsq.size }
-          val appendable = batchMin.keySet.filter { p =>
-            stored._1.get(p).exists(_ < batchMin(p)) &&
-              fileCount.getOrElse(p, 0) < CompactAtFiles
-          }
-          val mergeParts = (batchMin.keySet -- appendable).toSeq
-            .map { p =>
-              val Array(t, y, sb) = p.split("/").map(_.split("=")(1))
-              (t, y.toInt, sb.toInt)
-            }
-          val merged = readAg(attGroup) match {
-            case Some(old) if mergeParts.nonEmpty =>
-              val partsDf = spark.createDataFrame(mergeParts)
-                .toDF("timeframe", "year", "sbucket")
-              val oldAffected = old.join(broadcast(partsDf),
-                Seq("timeframe", "year", "sbucket"), "left_semi")
-              TimeSeries.unionKeepLast(
-                oldAffected.select(keyed.columns.map(col): _*), keyed, dedupKeys)
-            case _ => keyed
-          }
-          stageSwap(merged, attGroup, bucketed = true, logicalBuckets = logical,
-            appendParts = appendable)
-        case None =>
-          val keyed = keyedU
-          val merged = readAg(attGroup) match {
-            case Some(old) =>
-              val affected = keyed.select("symbol", "timeframe", "year").distinct()
-              val oldAffected = old.join(broadcast(affected), Seq("symbol", "timeframe", "year"), "left_semi")
-              TimeSeries.unionKeepLast(
-                oldAffected.select(keyed.columns.map(col): _*), keyed, dedupKeys)
-            case None => keyed
-          }
-          stageSwap(merged, attGroup)
+      val keyed = keyedU.withColumn("sbucket", sbucketCol(nb))
+      // ONE metadata pass over the batch: per-(symbol, timeframe,
+      // year) min Epoch — bounded by the symbol cardinality the
+      // manifest's bucket registry lists anyway — yields the logical
+      // buckets, the touched physical partitions, and the batch's min
+      // epoch per partition for append routing.
+      val touched = keyed1.groupBy("symbol", "timeframe", "year")
+        .agg(min(col(Uda.EpochCol)).as("__mn"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3)))
+      val logical = touched.map { case (s, t, _, _) => s"symbol=$s/timeframe=$t" }.toSet
+      val batchMin: Map[String, Long] = touched
+        .map { case (s, t, y, mn) => (s"timeframe=$t/year=$y/sbucket=${sbucketOf(s, nb)}", mn) }
+        .groupBy(_._1).map { case (p, ms) => p -> ms.map(_._2).min }
+      // APPEND fast path per partition: when the batch's min epoch
+      // strictly exceeds the partition's manifest-tracked max, no key
+      // can collide — the batch's rows land as a NEW file and the
+      // partition's existing files are never read or rewritten.
+      // Steady forward ingest (the 1-minute-bar cadence) is then
+      // O(batch) per commit instead of O(accumulated partition) — the
+      // merge-rewrite amplification the reference avoids with in-place
+      // year files. Late/overlapping data, unknown ranges (pre-feature
+      // manifests, post-delete partitions), and partitions whose file
+      // count reached CompactAtFiles take the merge path, which
+      // rewrites the partition into fresh files (compaction and range
+      // healing in the same commit).
+      val stored = resolveCurrent(attGroup)
+        .map(r => (r._4, r._2)).getOrElse((Map.empty[String, Long], Nil))
+      val fileCount: Map[String, Int] = stored._2
+        .groupBy(f => f.substring(0, f.lastIndexOf('/')))
+        .map { case (p, fsq) => p -> fsq.size }
+      val appendable = batchMin.keySet.filter { p =>
+        stored._1.get(p).exists(_ < batchMin(p)) &&
+          fileCount.getOrElse(p, 0) < CompactAtFiles
       }
+      val mergeParts = (batchMin.keySet -- appendable).toSeq
+        .map { p =>
+          val Array(t, y, sb) = p.split("/").map(_.split("=")(1))
+          (t, y.toInt, sb.toInt)
+        }
+      val merged = readAg(attGroup) match {
+        case Some(old) if mergeParts.nonEmpty =>
+          val partsDf = spark.createDataFrame(mergeParts)
+            .toDF("timeframe", "year", "sbucket")
+          val oldAffected = old.join(broadcast(partsDf),
+            Seq("timeframe", "year", "sbucket"), "left_semi")
+          TimeSeries.unionKeepLast(
+            oldAffected.select(keyed.columns.map(col): _*), keyed, dedupKeys)
+        case _ => keyed
+      }
+      stageSwap(merged, attGroup, logicalBuckets = logical, appendParts = appendable)
     }
 
   /** Recursive walk of `k=v` partition directories under `base`,
-    * yielding (leaf partition rel path, file) pairs — layout-agnostic:
-    * `symbol=S/timeframe=T/year=Y` (legacy) and
-    * `timeframe=T/year=Y/sbucket=B` (bucketed) both descend the same
-    * way. Engine dirs (`_graft_*`) and dot/underscore files never
+    * yielding (leaf partition rel path, file) pairs — the
+    * `timeframe=T/year=Y/sbucket=B` leaves of a group or of a staging
+    * dir. Engine dirs (`_graft_*`) and dot/underscore files never
     * match.
     */
   private def walkPartitionFiles(base: Path): Seq[(String, Path)] = {
@@ -1060,11 +1035,6 @@ class BucketCatalog(spark: SparkSession, root: String,
     * flip (a rename) is the commit point; the old snapshot's files
     * stay readable for [[VacuumGraceCommits]] more commits.
     */
-  private def bucketOf(part: String): String = {
-    val i = part.lastIndexOf('/')
-    if (i < 0) part else part.substring(0, i)
-  }
-
   private def commitManifest(
       attGroup: String, replacedParts: Set[String], addedFiles: Seq[String],
       logParts: Seq[String], addBuckets: Set[String] = Set.empty,
@@ -1075,32 +1045,27 @@ class BucketCatalog(spark: SparkSession, root: String,
     // superseded writer must be stopped HERE, before its staged files
     // can become visible
     if (!rootIsLocalFs) fenceWriterLease(Some(attGroup))
-    // bootstrap a pre-manifest root from its directory listing —
-    // minus the files this very commit just moved in
+    // bootstrap a pre-manifest root (a replica copy) from its
+    // directory listing — minus the files this very commit just moved
+    // in. symbol is a data column, not a path segment, so the
+    // (symbol, timeframe) registry costs a one-time distinct scan —
+    // only when the root already held files: a new group's first
+    // commit has nothing to register beyond its own buckets
     val added = addedFiles.toSet
     def partOf(f: String) = f.substring(0, f.lastIndexOf('/'))
     val (prevV, prev, prevBuckets, prevRanges) = resolveCurrent(attGroup) match {
       case Some((pv, files, buckets, ranges)) => (pv, files, buckets, ranges)
       case None =>
         val files = listDataFilesOnDisk(attGroup).filterNot(added)
-        // legacy paths carry the (symbol, timeframe) registry in their
-        // directory names; bucketed paths don't (symbol is a data
-        // column), so a pre-manifest BUCKETED root (a replica copy)
-        // pays a one-time distinct scan — deriving registry entries
-        // from bucketOf(path) there would mint garbage
-        // "timeframe=T/year=Y" entries and permanently drop every
-        // pre-existing symbol from listSymbols
-        val parts = files.map(partOf).distinct
-        val legacyReg = parts.filter(_.startsWith("symbol=")).map(bucketOf).distinct
-        val bucketedReg =
-          if (parts.forall(_.startsWith("symbol="))) Nil
+        val registry =
+          if (files.isEmpty) Nil
           else readAg(attGroup) match {
             case Some(old) => old.select("symbol", "timeframe").distinct()
               .collect().toSeq
               .map(r => s"symbol=${r.getString(0)}/timeframe=${r.getString(1)}")
             case None => Nil
           }
-        (0L, files, (legacyReg ++ bucketedReg).distinct, Map.empty[String, Long])
+        (0L, files, registry, Map.empty[String, Long])
     }
     val (dead, kept) = prev.partition(f => replacedParts.contains(partOf(f)))
     val v = prevV + 1
@@ -1175,7 +1140,6 @@ class BucketCatalog(spark: SparkSession, root: String,
     */
   private def stageSwap(df: DataFrame, attGroup: String,
       clearIfUnstaged: Seq[String] = Nil,
-      bucketed: Boolean = false,
       logicalBuckets: Set[String] = Set.empty,
       removeBuckets: Set[String] = Set.empty,
       appendParts: Set[String] = Set.empty): Unit = {
@@ -1189,18 +1153,16 @@ class BucketCatalog(spark: SparkSession, root: String,
     // repartition of a small-byte batch back to one partition (row
     // bytes are tiny; the file-count cost AQE can't see is not), and
     // user-numbered repartitions are exempt from coalescing.
-    val partitionCols =
-      if (bucketed) Seq("timeframe", "year", "sbucket")
-      else Seq("symbol", "timeframe", "year")
-    // bucketed files keep rows (symbol, Epoch[, Nanoseconds])-sorted:
-    // parquet row-group min/max stats on the sorted symbol column are
-    // what keeps single-symbol reads skipping inside shared files. The
-    // sort leads with the partition columns, so FileFormatWriter sees
-    // its required partition ordering already satisfied and inserts no
+    val partitionCols = Seq("timeframe", "year", "sbucket")
+    // files keep rows (symbol, Epoch[, Nanoseconds])-sorted: parquet
+    // row-group min/max stats on the sorted symbol column are what
+    // keeps single-symbol reads skipping inside shared files. The sort
+    // leads with the partition columns, so FileFormatWriter sees its
+    // required partition ordering already satisfied and inserts no
     // second sort of its own.
     val sortCols = (partitionCols ++ Seq("symbol", Uda.EpochCol) ++
       (if (df.columns.contains(Uda.NanosCol)) Seq(Uda.NanosCol) else Nil))
-      .distinct.map(col)
+      .map(col)
     df.repartition(df.sparkSession.sparkContext.defaultParallelism,
         partitionCols.map(col): _*)
       .sortWithinPartitions(sortCols: _*)
@@ -1257,18 +1219,15 @@ class BucketCatalog(spark: SparkSession, root: String,
         } finally pool.shutdownNow()
       }
       // a rewrite keeps its buckets listed even when it emptied them
-      // (trim semantics: the bucket exists with zero rows). In the
-      // bucketed layout physical partition names carry no symbol, so
-      // the logical (symbol, timeframe) registry entries come from the
-      // caller; legacy derives them from the staged paths.
+      // (trim semantics: the bucket exists with zero rows). Physical
+      // partition names carry no symbol, so the logical
+      // (symbol, timeframe) registry entries come from the caller.
       commitManifest(attGroup,
         (stagedParts.toSet -- appendParts) ++ clearIfUnstaged,
         movedFiles,
         logParts = stagedParts.toSeq.sorted ++
           clearIfUnstaged.filterNot(stagedParts).map(_ + ":cleared"),
-        addBuckets =
-          if (bucketed) logicalBuckets
-          else (stagedParts.toSet ++ clearIfUnstaged).map(bucketOf),
+        addBuckets = logicalBuckets,
         removeBuckets = removeBuckets,
         setRanges = stagedRanges,
         // a staged partition with NO readable footer max must DROP
@@ -1571,7 +1530,7 @@ class BucketCatalog(spark: SparkSession, root: String,
 
   // --------------------------------------------------------------- reads
 
-  /** The whole attribute group as one DataFrame (symbol/timeframe/year
+  /** The whole attribute group as one DataFrame (timeframe/year/sbucket
     * partition columns included), resolved through the current
     * manifest snapshot. None ⇒ no data.
     */
@@ -1648,8 +1607,8 @@ class BucketCatalog(spark: SparkSession, root: String,
           }
         }
       case None =>
-        // pre-manifest root (a replica, or a legacy store): directory
-        // listing — any `k=v` partition dir at the top level means data
+        // pre-manifest root (a replica): directory listing — any `k=v`
+        // partition dir at the top level means data
         val p = new Path(agPath(attGroup))
         val hasData = fs.exists(p) &&
           fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.contains("="))
@@ -1672,29 +1631,23 @@ class BucketCatalog(spark: SparkSession, root: String,
     dropLayoutCols(readAgOrFail(attGroup).filter(col("timeframe") === timeframe))
 
   /** Partition-pruned scan of an EXPLICIT symbol list of one
-    * attGroup/timeframe: in the bucketed layout the symbols' sbuckets
-    * prune partitions to ≤ |symbols| of the N physical buckets before
-    * the pushed symbol predicate skips row groups inside them.
+    * attGroup/timeframe: the symbols' sbuckets prune partitions to
+    * ≤ |symbols| of the N physical buckets before the pushed symbol
+    * predicate skips row groups inside them.
     */
   def readMulti(attGroup: String, timeframe: String, symbols: Seq[String]): DataFrame = {
     val base = readAgOrFail(attGroup).filter(col("timeframe") === timeframe)
-    val pruned = layoutBuckets(attGroup) match {
-      case Some(nb) =>
-        val sbs = symbols.map(sbucketOf(_, nb)).distinct
-        base.filter(col("sbucket").isin(sbs: _*))
-      case None => base
-    }
-    dropLayoutCols(pruned.filter(col("symbol").isin(symbols: _*)))
+    val nb = layoutBuckets(attGroup)
+    val sbs = symbols.map(sbucketOf(_, nb)).distinct
+    dropLayoutCols(base.filter(col("sbucket").isin(sbs: _*))
+      .filter(col("symbol").isin(symbols: _*)))
   }
 
   /** Partition-pruned scan of one bucket, time-ordered. */
   def read(tbk: TimeBucketKey): DataFrame = {
     val base = readAgOrFail(tbk.attGroup)
-    val prunedToBucket = layoutBuckets(tbk.attGroup) match {
-      case Some(nb) => base.filter(col("sbucket") === sbucketOf(tbk.symbol, nb))
-      case None => base
-    }
-    val df = dropLayoutCols(prunedToBucket
+    val df = dropLayoutCols(base
+      .filter(col("sbucket") === sbucketOf(tbk.symbol, layoutBuckets(tbk.attGroup)))
       .filter(col("symbol") === tbk.symbol && col("timeframe") === tbk.timeframe))
     val ord =
       if (df.columns.contains(Uda.NanosCol)) Seq(col(Uda.EpochCol), col(Uda.NanosCol))
@@ -1711,21 +1664,13 @@ class BucketCatalog(spark: SparkSession, root: String,
     case Some(buckets) =>
       buckets.map(_.split("/")(0).stripPrefix("symbol=")).distinct.sorted
     case None =>
-      val p = new Path(agPath(attGroup))
-      if (!fs.exists(p)) Nil
-      else {
-        val symDirs = fs.listStatus(p).toIndexedSeq.map(_.getPath.getName)
-          .filter(_.startsWith("symbol="))
-        if (symDirs.nonEmpty) symDirs.map(_.stripPrefix("symbol=")).sorted
-        else
-          // bucketed pre-manifest root (a replica): symbol is a data
-          // column, not a path segment — one distinct scan. Replicas
-          // trade this scan for having no manifest of their own.
-          readAg(attGroup) match {
-            case Some(df) => df.select("symbol").distinct()
-              .collect().map(_.getString(0)).toIndexedSeq.sorted
-            case None => Nil
-          }
+      // pre-manifest root (a replica): symbol is a data column, not a
+      // path segment — one distinct scan. Replicas trade this scan for
+      // having no manifest of their own.
+      readAg(attGroup) match {
+        case Some(df) => df.select("symbol").distinct()
+          .collect().map(_.getString(0)).toIndexedSeq.sorted
+        case None => Nil
       }
   }
 
@@ -1743,29 +1688,15 @@ class BucketCatalog(spark: SparkSession, root: String,
   }
 
   /** Most recent year partition of one bucket (GetInfo's LatestYear).
-    * Legacy layout answers from path segments alone; the bucketed
-    * layout shares files across symbols, so the answer is a
-    * doubly-pruned (sbucket partition + pushed symbol predicate)
-    * max-aggregate scan of the symbol's single bucket slice.
+    * Files are shared across symbols, so the answer is a doubly-pruned
+    * (sbucket partition + pushed symbol predicate) max-aggregate scan
+    * of the symbol's single bucket slice.
     */
   def latestYear(tbk: TimeBucketKey): Option[Int] =
-    if (layoutBuckets(tbk.attGroup).isDefined) {
-      if (!listTimeframes(tbk.attGroup, tbk.symbol).contains(tbk.timeframe) ||
-          readAg(tbk.attGroup).isEmpty) None
-      else read(tbk).agg(max(col("year"))).collect().headOption
-        .flatMap(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-    } else liveFiles(tbk.attGroup) match {
-      case Some(files) =>
-        val prefix = s"symbol=${tbk.symbol}/timeframe=${tbk.timeframe}/"
-        files.filter(_.startsWith(prefix))
-          .map(_.split("/")(2).stripPrefix("year=").toInt).maxOption
-      case None =>
-        val p = new Path(agPath(tbk.attGroup),
-          s"symbol=${tbk.symbol}/timeframe=${tbk.timeframe}")
-        if (!fs.exists(p)) None
-        else fs.listStatus(p).toIndexedSeq.map(_.getPath.getName)
-          .filter(_.startsWith("year=")).map(_.stripPrefix("year=").toInt).maxOption
-    }
+    if (!listTimeframes(tbk.attGroup, tbk.symbol).contains(tbk.timeframe) ||
+        readAg(tbk.attGroup).isEmpty) None
+    else read(tbk).agg(max(col("year"))).collect().headOption
+      .flatMap(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
 
   def listTimeframes(attGroup: String, symbol: String): Seq[String] =
     liveBuckets(attGroup) match {
@@ -1773,23 +1704,14 @@ class BucketCatalog(spark: SparkSession, root: String,
         buckets.filter(_.startsWith(s"symbol=$symbol/"))
           .map(_.split("/")(1).stripPrefix("timeframe=")).distinct.sorted
       case None =>
-        val legacy = new Path(agPath(attGroup), s"symbol=$symbol")
-        if (fs.exists(legacy))
-          fs.listStatus(legacy).toIndexedSeq.map(_.getPath.getName)
-            .filter(_.startsWith("timeframe=")).map(_.stripPrefix("timeframe=")).sorted
-        else {
-          // bucketed pre-manifest root (a replica): timeframe IS the
-          // top-level partition dir; ONE symbol-pruned distinct scan
-          // answers all of them (a per-timeframe isEmpty probe would
-          // re-resolve the frame and launch one job per candidate)
-          val p = new Path(agPath(attGroup))
-          if (!fs.exists(p)) Nil
-          else readAg(attGroup) match {
-            case Some(old) => old.filter(col("symbol") === symbol)
-              .select("timeframe").distinct()
-              .collect().map(_.getString(0)).toIndexedSeq.sorted
-            case None => Nil
-          }
+        // pre-manifest root (a replica): ONE symbol-pruned distinct
+        // scan answers every timeframe (a per-timeframe isEmpty probe
+        // would re-resolve the frame and launch one job per candidate)
+        readAg(attGroup) match {
+          case Some(old) => old.filter(col("symbol") === symbol)
+            .select("timeframe").distinct()
+            .collect().map(_.getString(0)).toIndexedSeq.sorted
+          case None => Nil
         }
     }
 
@@ -1810,124 +1732,42 @@ class BucketCatalog(spark: SparkSession, root: String,
             b.substring(i + 1).stripPrefix("timeframe="))
         }.toSeq.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
       case None =>
-        val p = new Path(agPath(attGroup))
-        if (!fs.exists(p)) Map.empty
-        else {
-          val symDirs = fs.listStatus(p).toIndexedSeq.map(_.getPath.getName)
-            .filter(_.startsWith("symbol="))
-          if (symDirs.nonEmpty)
-            symDirs.map { d =>
-              d.stripPrefix("symbol=") ->
-                fs.listStatus(new Path(p, d)).toIndexedSeq.map(_.getPath.getName)
-                  .filter(_.startsWith("timeframe="))
-                  .map(_.stripPrefix("timeframe=")).toSet
-            }.toMap
-          else readAg(attGroup) match {
-            // bucketed pre-manifest root (a replica): one distinct scan
-            // answers the whole map
-            case Some(old) => old.select("symbol", "timeframe").distinct()
-              .collect().toIndexedSeq
-              .groupMap(_.getString(0))(_.getString(1)).view.mapValues(_.toSet).toMap
-            case None => Map.empty
-          }
+        // pre-manifest root (a replica): one distinct scan answers the
+        // whole map
+        readAg(attGroup) match {
+          case Some(old) => old.select("symbol", "timeframe").distinct()
+            .collect().toIndexedSeq
+            .groupMap(_.getString(0))(_.getString(1)).view.mapValues(_.toSet).toMap
+          case None => Map.empty
         }
     }
 
   /** Drop one symbol/timeframe from a bucket (frontend Destroy,
-    * frontend/write.go:182-210). Legacy layout: a manifest commit that
-    * removes the symbol's partitions from the live set (physical files
-    * follow at vacuum). Bucketed layout: files are shared across
-    * symbols, so the symbol's (timeframe, year, sbucket) slices are
-    * REWRITTEN without its rows — bounded by 1/N of the group's years,
-    * through the same staged commit as every write.
+    * frontend/write.go:182-210). Files are shared across symbols, so
+    * the symbol's (timeframe, year, sbucket) slices are REWRITTEN
+    * without its rows — bounded by 1/N of the group's years, through
+    * the same staged commit as every write (on a pre-manifest replica
+    * root, that commit bootstraps the replica's manifest).
     */
   def destroy(tbk: TimeBucketKey): Unit = mutate(tbk.attGroup) {
     val rel = s"symbol=${tbk.symbol}/timeframe=${tbk.timeframe}"
-    (liveFiles(tbk.attGroup), layoutBuckets(tbk.attGroup)) match {
-      case (Some(_), Some(nb)) =>
-        val sb = sbucketOf(tbk.symbol, nb)
-        val old = readAg(tbk.attGroup)
-        val slice = old.map(_.filter(
-          col("timeframe") === tbk.timeframe && col("sbucket") === sb))
-        // years the symbol actually occupies — a small doubly-pruned
-        // metadata job bounding the rewrite to the slices that change
-        val years = slice.map(_.filter(col("symbol") === tbk.symbol)
-          .select("year").distinct().collect().map(_.getInt(0)).toSeq).getOrElse(Nil)
-        if (years.isEmpty)
-          commitManifest(tbk.attGroup, Set.empty, Nil, Seq(s"$rel:cleared"),
-            removeBuckets = Set(rel))
-        else {
-          val keep = slice.get.filter(col("year").isin(years: _*))
-            .filter(col("symbol") =!= tbk.symbol)
-          stageSwap(keep, tbk.attGroup,
-            clearIfUnstaged = years.map(y =>
-              s"timeframe=${tbk.timeframe}/year=$y/sbucket=$sb"),
-            bucketed = true, removeBuckets = Set(rel))
-        }
-      case (Some(files), None) =>
-        def partOf(f: String) = f.substring(0, f.lastIndexOf('/'))
-        val gone = files.filter(_.startsWith(rel + "/")).map(partOf).toSet
-        commitManifest(tbk.attGroup, gone, Nil, Seq(s"$rel:cleared"),
-          removeBuckets = Set(rel), clearRanges = gone)
-      case (None, _) =>
-        val p = new Path(agPath(tbk.attGroup), rel)
-        if (fs.exists(p)) fs.delete(p, true)
-        val symDir = p.getParent
-        if (fs.exists(symDir) && fs.listStatus(symDir).isEmpty) fs.delete(symDir, true)
-        // replicas must apply destroys too or they diverge forever
-        logCommit(tbk.attGroup, Seq(s"$rel:cleared"))
-    }
-  }
-
-  /** Migrate a LEGACY per-symbol-directory group to the symbol-
-    * bucketed layout in ONE manifest flip — the maintenance path for
-    * stores created before bucketed layouts (or with
-    * `symbolBuckets = 0`): the group's per-symbol smallfiles merge
-    * into ≤ buckets × timeframes × years sorted files, so every
-    * subsequent wide commit stages O(buckets) files instead of
-    * O(symbols) — the compaction answer to the 16k-files-per-commit
-    * trajectory the reference avoids with preallocated year files
-    * written in place (docs/design/file_format_design.txt).
-    *
-    * Safety: the rewrite is one ordinary [[stageSwap]] commit —
-    * readers pinned at pre-compaction manifest versions keep reading
-    * the legacy files for the vacuum grace window, and the logical
-    * (symbol, timeframe) registry is carried over unchanged. The meta
-    * flips to `buckets=N` only AFTER the manifest flip; a reader
-    * planning in between reads the bucketed files correctly, just
-    * without sbucket partition pruning (the symbol predicate still
-    * row-group-skips via the sorted column's min/max stats).
-    *
-    * Returns true if the group was migrated, false if already
-    * bucketed. Idempotent; a no-data group just flips its meta.
-    */
-  def compactToBuckets(attGroup: String,
-      symbolBuckets: Int = DefaultSymbolBuckets): Boolean = mutate(attGroup) {
-    require(symbolBuckets > 0, s"symbolBuckets must be > 0, got $symbolBuckets")
-    val (variable, schema, buckets) = readMeta(attGroup)
-    if (buckets.isDefined) false
+    val sb = sbucketOf(tbk.symbol, layoutBuckets(tbk.attGroup))
+    val slice = readAg(tbk.attGroup).map(_.filter(
+      col("timeframe") === tbk.timeframe && col("sbucket") === sb))
+    // years the symbol actually occupies — a small doubly-pruned
+    // metadata job bounding the rewrite to the slices that change
+    val years = slice.map(_.filter(col("symbol") === tbk.symbol)
+      .select("year").distinct().collect().map(_.getInt(0)).toSeq).getOrElse(Nil)
+    if (years.isEmpty)
+      commitManifest(tbk.attGroup, Set.empty, Nil, Seq(s"$rel:cleared"),
+        removeBuckets = Set(rel))
     else {
-      readAg(attGroup).foreach { old =>
-        def partOf(f: String) = f.substring(0, f.lastIndexOf('/'))
-        // the partitions whose files must leave the live set: the
-        // manifest's when there is one, the disk listing for a
-        // pre-manifest root (where commitManifest bootstraps its
-        // previous file list from the same walk)
-        val legacyParts = liveFiles(attGroup)
-          .getOrElse(listDataFilesOnDisk(attGroup))
-          .map(partOf).distinct
-        val registry = liveBuckets(attGroup)
-          .getOrElse(legacyParts.map(bucketOf).distinct).toSet
-        val keyed = old.withColumn("sbucket", sbucketCol(symbolBuckets))
-        stageSwap(keyed, attGroup, clearIfUnstaged = legacyParts,
-          bucketed = true, logicalBuckets = registry)
-      }
-      val meta = new Path(agPath(attGroup), MetaFile)
-      val kind = (if (variable) "variable" else "fixed") + s" buckets=$symbolBuckets"
-      val out = fs.create(meta, true)
-      out.write(s"$kind\n${schema.json}\n".getBytes("UTF-8"))
-      out.close()
-      true
+      val keep = slice.get.filter(col("year").isin(years: _*))
+        .filter(col("symbol") =!= tbk.symbol)
+      stageSwap(keep, tbk.attGroup,
+        clearIfUnstaged = years.map(y =>
+          s"timeframe=${tbk.timeframe}/year=$y/sbucket=$sb"),
+        removeBuckets = Set(rel))
     }
   }
 
@@ -1955,37 +1795,22 @@ class BucketCatalog(spark: SparkSession, root: String,
       val n = if (existing.columns.contains(Uda.NanosCol)) col(Uda.NanosCol) else lit(0)
       val inRange = e >= startEpoch && e <= endEpoch &&
         !(e === startEpoch && n < startNanos) && !(e === endEpoch && n > endNanos)
-      layoutBuckets(tbk.attGroup) match {
-        case Some(nb) =>
-          // shared files: rewrite the symbol's (timeframe, year,
-          // sbucket) slices keeping every other symbol's rows — the
-          // doubly-pruned read bounds the rewrite to 1/N of the
-          // touched years
-          val sb = sbucketOf(tbk.symbol, nb)
-          val slice = existing.filter(
-            col("timeframe") === tbk.timeframe && col("sbucket") === sb)
-          val isMine = col("symbol") === tbk.symbol
-          val touchedYears = slice.filter(isMine && inRange)
-            .select("year").distinct().collect().map(_.getInt(0))
-          if (touchedYears.isEmpty) return
-          val keep = slice.filter(col("year").isin(touchedYears.toSeq: _*))
-            .filter(!(isMine && inRange))
-          stageSwap(keep, tbk.attGroup,
-            clearIfUnstaged = touchedYears.toSeq.map(y =>
-              s"timeframe=${tbk.timeframe}/year=$y/sbucket=$sb"),
-            bucketed = true,
-            logicalBuckets = Set(s"symbol=${tbk.symbol}/timeframe=${tbk.timeframe}"))
-        case None =>
-          val mine = existing.filter(
-            col("symbol") === tbk.symbol && col("timeframe") === tbk.timeframe)
-          val touchedYears = mine.filter(inRange)
-            .select("year").distinct().collect().map(_.getInt(0))
-          if (touchedYears.isEmpty) return
-          val keep = mine.filter(col("year").isin(touchedYears.toSeq: _*)).filter(!inRange)
-          stageSwap(keep, tbk.attGroup,
-            clearIfUnstaged = touchedYears.toSeq.map(y =>
-              s"symbol=${tbk.symbol}/timeframe=${tbk.timeframe}/year=$y"))
-      }
+      // shared files: rewrite the symbol's (timeframe, year, sbucket)
+      // slices keeping every other symbol's rows — the doubly-pruned
+      // read bounds the rewrite to 1/N of the touched years
+      val sb = sbucketOf(tbk.symbol, layoutBuckets(tbk.attGroup))
+      val slice = existing.filter(
+        col("timeframe") === tbk.timeframe && col("sbucket") === sb)
+      val isMine = col("symbol") === tbk.symbol
+      val touchedYears = slice.filter(isMine && inRange)
+        .select("year").distinct().collect().map(_.getInt(0))
+      if (touchedYears.isEmpty) return
+      val keep = slice.filter(col("year").isin(touchedYears.toSeq: _*))
+        .filter(!(isMine && inRange))
+      stageSwap(keep, tbk.attGroup,
+        clearIfUnstaged = touchedYears.toSeq.map(y =>
+          s"timeframe=${tbk.timeframe}/year=$y/sbucket=$sb"),
+        logicalBuckets = Set(s"symbol=${tbk.symbol}/timeframe=${tbk.timeframe}"))
     }
 
   /** Zero all data on/after a date (CLI trim,

@@ -55,20 +55,23 @@ object Integrity {
           case None => (spark.read.parquet(s"$root/$ag"), Seq.empty[String])
         }
         val scoped = df.filter(col("year") >= yearStart && col("year") <= yearEnd)
-        // layout-agnostic partition-segment parse: legacy paths carry
-        // symbol=S; bucketed paths don't (files are shared across
-        // symbols), so their foreign files report under symbol "*"
+        // files are shared across symbols, so foreign files report
+        // per (timeframe, year) under symbol "*" — rows of their own,
+        // so a violation never vanishes for lack of data rows
         def seg(f: String, key: String): Option[String] =
           f.split("/").find(_.startsWith(key + "=")).map(_.stripPrefix(key + "="))
-        val foreignByPart: Map[(String, String, Int), Long] = foreign
+        val foreignRows = foreign
           .flatMap { f =>
             for {
               tf <- seg(f, "timeframe")
               y <- seg(f, "year").flatMap(s => scala.util.Try(s.toInt).toOption)
-            } yield (seg(f, "symbol").getOrElse("*"), tf, y)
+            } yield (tf, y)
           }
-          .filter { case (_, _, y) => y >= yearStart && y <= yearEnd }
-          .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+          .filter { case (_, y) => y >= yearStart && y <= yearEnd }
+          .groupBy(identity).toSeq
+          .map { case ((tf, yr), hits) =>
+            Row(ag, "*", tf, yr, 0L, 0L, 0L, hits.size.toLong, false, null)
+          }
         val keys = Seq("symbol", "timeframe", "year", Uda.EpochCol) ++
           (if (variable) Seq(Uda.NanosCol) else Nil)
         val perKey = scoped
@@ -83,21 +86,11 @@ object Integrity {
             sum(col("__ymm")).as("n_year_mismatch"))
           .collect().toSeq
           .map { r =>
-            val (sym, tf, yr) = (r.getString(0), r.getString(1), r.getInt(2))
-            val nForeign = foreignByPart.getOrElse((sym, tf, yr), 0L)
-            val ok = r.getLong(4) == 0L && r.getLong(5) == 0L && nForeign == 0L
-            Row(ag, sym, tf, yr, r.getLong(3), r.getLong(4), r.getLong(5),
-              nForeign, ok, null)
+            val ok = r.getLong(4) == 0L && r.getLong(5) == 0L
+            Row(ag, r.getString(0), r.getString(1), r.getInt(2), r.getLong(3),
+              r.getLong(4), r.getLong(5), 0L, ok, null)
           }
-        // foreign keys with no data-row group of their own (bucketed
-        // layout's "*" rows, or an empty foreign partition) still
-        // surface — a violation must never vanish for lack of rows
-        val covered = aggRows.map(r => (r.getString(1), r.getString(2), r.getInt(3))).toSet
-        val orphanForeign = foreignByPart.collect {
-          case ((sym, tf, yr), n) if !covered((sym, tf, yr)) =>
-            Row(ag, sym, tf, yr, 0L, 0L, 0L, n, false, null)
-        }
-        aggRows ++ orphanForeign
+        aggRows ++ foreignRows
       } catch {
         case NonFatal(e) =>
           Seq(Row(ag, null, null, null, null, null, null, null,

@@ -92,8 +92,8 @@ final class ReplicaSync(spark: SparkSession, primaryRoot: String, replicaRoot: S
       val dst = new Path(new Path(replicaRoot, ag), rel)
       if (cleared) {
         if (fs.exists(dst)) fs.delete(dst, true)
-        // prune now-empty parents so listSymbols agrees with the
-        // primary (destroy removes the empty symbol dir there too)
+        // prune now-empty parents (year and timeframe dirs), as the
+        // primary's vacuum does, so no empty partition dir lingers
         var parent = dst.getParent
         val stop = new Path(replicaRoot, ag)
         while (parent != null && parent != stop &&

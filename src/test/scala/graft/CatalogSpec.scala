@@ -54,6 +54,10 @@ class CatalogSpec extends SparkSpec {
     cat.write(tbk, Seq((100L, 100, 7.0), (100L, 700, 9.0)).toDF("Epoch", "Nanoseconds", "Bid"))
     val after = TimeSeries.limit(cat.read(tbk), 10, fromStart = true).collect()
     assert(after.map(_.getAs[Double]("Bid")).toSeq == Seq(0.5, 7.0, 2.0, 9.0, 3.0))
+    // a second symbol of the variable group lists beside the first
+    cat.write(TimeBucketKey.parse("TEST2/1Sec/Tick"),
+      Seq((100L, 200, 4.0)).toDF("Epoch", "Nanoseconds", "Bid"))
+    assert(cat.listSymbols("Tick") == Seq("TEST", "TEST2"))
   }
 
   test("catalog: listSymbols, destroy, getInfo") {
@@ -67,21 +71,35 @@ class CatalogSpec extends SparkSpec {
     assert(!variable && schema.fieldNames.contains("Open"))
     cat.destroy(TimeBucketKey.parse("AAPL/1Min/OHLCV"))
     assert(cat.listSymbols("OHLCV") == Seq("MSFT"))
+    cat.destroy(TimeBucketKey.parse("MSFT/1Min/OHLCV"))
+    assert(cat.listSymbols("OHLCV").isEmpty)
   }
 
-  test("listTimeframesBySymbol ≡ per-symbol listTimeframes (manifest + legacy)") {
+  test("listTimeframesBySymbol ≡ per-symbol listTimeframes (manifest + replica root)") {
     val root = freshRoot()
     val cat = new BucketCatalog(spark, root)
     // heterogeneous stored-TF sets across symbols
-    for ((sym, tfs) <- Seq("AAPL" -> Seq("1Min", "5Min"), "MSFT" -> Seq("1Min"), "GOOG" -> Seq("1D")))
-      for (tf <- tfs)
-        cat.write(TimeBucketKey.parse(s"$sym/$tf/OHLCV"),
-          Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close"))
-    val bulk = cat.listTimeframesBySymbol("OHLCV")
-    assert(bulk.keySet == Set("AAPL", "MSFT", "GOOG"))
-    for (s <- bulk.keySet)
-      assert(bulk(s) == cat.listTimeframes("OHLCV", s).toSet, s"symbol $s")
-    assert(cat.listTimeframesBySymbol("NOPE").isEmpty)
+    val stored = Seq("AAPL" -> Seq("1Min", "5Min"), "MSFT" -> Seq("1Min"), "GOOG" -> Seq("1D"))
+    for ((sym, tfs) <- stored; tf <- tfs)
+      cat.write(TimeBucketKey.parse(s"$sym/$tf/OHLCV"),
+        Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close"))
+    // the same groups on a replica root: no manifest there, so every
+    // listing answers from the pre-manifest distinct scans
+    val replicaRoot = freshRoot()
+    new graft.catalog.ReplicaSync(spark, root, replicaRoot).sync()
+    val replica = new BucketCatalog(spark, replicaRoot)
+    assert(replica.liveFiles("OHLCV").isEmpty)
+    for ((c, name) <- Seq(cat -> "manifest", replica -> "replica")) {
+      val bulk = c.listTimeframesBySymbol("OHLCV")
+      assert(bulk == stored.toMap.view.mapValues(_.toSet).toMap, name)
+      for (s <- bulk.keySet)
+        assert(bulk(s) == c.listTimeframes("OHLCV", s).toSet, s"$name symbol $s")
+      for ((sym, tfs) <- stored; tf <- tfs)
+        assert(c.latestYear(TimeBucketKey.parse(s"$sym/$tf/OHLCV")).contains(1970),
+          s"$name $sym/$tf")
+      assert(c.latestYear(TimeBucketKey.parse("AAPL/1D/OHLCV")).isEmpty, name)
+      assert(c.listTimeframesBySymbol("NOPE").isEmpty, name)
+    }
   }
 
   test("query service: range + projection + LAST limit + wildcard") {
@@ -427,21 +445,19 @@ class CatalogSpec extends SparkSpec {
     assert(cat.read(TimeBucketKey.parse("S778/1Sec/WIDE")).count() == 1)
   }
 
-  test("legacy per-symbol layout (symbolBuckets = 0) stays readable and writable") {
+  test("a group meta with no buckets= token is refused by name") {
     val root = freshRoot()
     val cat = new BucketCatalog(spark, root)
-    val tbk = TimeBucketKey.parse("AAPL/1Min/LEG")
-    cat.create(tbk, ohlcv, isVariable = false, symbolBuckets = 0)
-    cat.write(tbk, Seq((60L, 1.0, 1.5), (120L, 2.0, 2.5)).toDF("Epoch", "Open", "Close"))
-    cat.write(tbk, Seq((120L, 9.0, 9.5)).toDF("Epoch", "Open", "Close")) // upsert
-    assert(cat.layoutBuckets("LEG").isEmpty)
-    // physical layout IS per-symbol directories
-    assert(cat.liveFiles("LEG").get.forall(_.startsWith("symbol=AAPL/timeframe=1Min/")))
-    val got = cat.read(tbk).orderBy("Epoch").collect()
-    assert(got.map(_.getAs[Double]("Open")).toSeq == Seq(1.0, 9.0))
-    assert(cat.latestYear(tbk).contains(1970))
-    cat.destroy(tbk)
-    assert(cat.listSymbols("LEG").isEmpty)
+    val meta = java.nio.file.Paths.get(root, "NOBKT", BucketCatalog.MetaFile)
+    Files.createDirectories(meta.getParent)
+    Files.writeString(meta, s"fixed\n${ohlcv.json}\n")
+    val e = intercept[IllegalStateException] {
+      cat.write(TimeBucketKey.parse("AAPL/1Min/NOBKT"),
+        Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close"))
+    }
+    assert(e.getMessage.contains(meta.toString) && e.getMessage.contains("buckets="),
+      e.getMessage)
+    assert(cat.liveFiles("NOBKT").isEmpty, "a refused write must commit nothing")
   }
 
   test("cross-process single-writer guard refuses a locked root, recovers after release") {
@@ -880,70 +896,6 @@ class CatalogSpec extends SparkSpec {
     cat2.write(vt, Seq((100L, 500, 2.0)).toDF("Epoch", "Nanoseconds", "Bid"))
     assert(TimeSeries.limit(cat2.read(vt), 10, fromStart = true).collect()
       .map(_.getAs[Double]("Bid")).toSeq == Seq(1.0, 2.0))
-  }
-
-  test("compactToBuckets migrates a legacy group to bucketed files under one manifest flip") {
-    val root = freshRoot()
-    val cat = new BucketCatalog(spark, root)
-    // a legacy group: one directory (and one commit file) per symbol
-    val symbols = (1 to 40).map(i => s"L$i")
-    cat.create(TimeBucketKey.parse(s"${symbols.head}/1Min/MIG"), ohlcv,
-      isVariable = false, symbolBuckets = 0)
-    cat.writeMulti("MIG", "1Min", symbols.zipWithIndex
-      .map { case (s, i) => (s, 60L * (i + 1), i.toDouble, i + 0.5) }
-      .toDF("symbol", "Epoch", "Open", "Close"))
-    val preVersion = cat.manifestVersions("MIG").max
-    val preRows = cat.readMulti("MIG", "1Min")
-      .select("symbol", "Epoch", "Open").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(cat.liveFiles("MIG").get.size >= symbols.size, "legacy: one file per symbol")
-    // migrate — idempotent, one commit
-    assert(cat.compactToBuckets("MIG", symbolBuckets = 8))
-    assert(!cat.compactToBuckets("MIG", symbolBuckets = 8), "second call must no-op")
-    assert(cat.layoutBuckets("MIG").contains(8))
-    val live = cat.liveFiles("MIG").get
-    assert(live.size <= 8, s"${live.size} files live after compaction to 8 buckets")
-    assert(live.forall(_.startsWith("timeframe=1Min/year=1970/sbucket=")))
-    // content, registry, and single-symbol reads survive unchanged
-    val postRows = cat.readMulti("MIG", "1Min")
-      .select("symbol", "Epoch", "Open").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(postRows == preRows, "compaction changed the data")
-    assert(cat.listSymbols("MIG") == symbols.sorted)
-    assert(cat.read(TimeBucketKey.parse("L7/1Min/MIG")).collect()
-      .map(_.getAs[Double]("Open")).toSeq == Seq(6.0))
-    // a reader pinned at the pre-compaction snapshot stays readable
-    // (legacy files survive the vacuum grace window)
-    val pinned = cat.readGroupAt("MIG", preVersion).get
-      .select("symbol", "Epoch", "Open").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pinned == preRows, "pinned pre-compaction reader diverged")
-    // subsequent wide writes commit O(buckets) files and upsert correctly
-    cat.writeMulti("MIG", "1Min", symbols.map(s => (s, 60L, 100.0, 100.5))
-      .toDF("symbol", "Epoch", "Open", "Close"))
-    assert(cat.liveFiles("MIG").get.size <= 8)
-    assert(cat.read(TimeBucketKey.parse("L7/1Min/MIG")).orderBy("Epoch").collect()
-      .map(_.getAs[Double]("Open")).toSeq == Seq(100.0, 6.0))
-    // a VARIABLE legacy group migrates too: Nanoseconds key survives,
-    // reads stay (Epoch, Nanoseconds)-sorted, record type preserved
-    val vt = TimeBucketKey.parse("V1/1Sec/MIGV")
-    cat.create(vt, StructType(Seq(
-      StructField("Epoch", LongType), StructField("Nanoseconds", IntegerType),
-      StructField("Bid", DoubleType))), isVariable = true, symbolBuckets = 0)
-    cat.write(vt, Seq((100L, 900, 3.0), (100L, 100, 1.0), (99L, 500, 0.5))
-      .toDF("Epoch", "Nanoseconds", "Bid"))
-    cat.write(TimeBucketKey.parse("V2/1Sec/MIGV"),
-      Seq((100L, 200, 7.0)).toDF("Epoch", "Nanoseconds", "Bid"))
-    assert(cat.compactToBuckets("MIGV", symbolBuckets = 4))
-    assert(cat.isVariable("MIGV"), "record type must survive migration")
-    assert(cat.layoutBuckets("MIGV").contains(4))
-    assert(TimeSeries.limit(cat.read(vt), 10, fromStart = true).collect()
-      .map(_.getAs[Double]("Bid")).toSeq == Seq(0.5, 1.0, 3.0))
-    // same (Epoch, Nanoseconds) upsert still overwrites post-migration
-    cat.write(vt, Seq((100L, 100, 8.0)).toDF("Epoch", "Nanoseconds", "Bid"))
-    assert(TimeSeries.limit(cat.read(vt), 10, fromStart = true).collect()
-      .map(_.getAs[Double]("Bid")).toSeq == Seq(0.5, 8.0, 3.0))
-    assert(cat.listSymbols("MIGV") == Seq("V1", "V2"))
   }
 
   test("orphaned staging dirs are recoverable; commits leave a durable trail (executor/wal.go role)") {

@@ -60,6 +60,29 @@ class ReplicaSpec extends SparkSpec {
     assert(replica.listSymbols("OHLCV") == Seq("AAPL"))
   }
 
+  test("destroy on a replica root removes the bucket there") {
+    val primaryRoot = Files.createTempDirectory("graft-dst-primary").toString
+    val replicaRoot = Files.createTempDirectory("graft-dst-replica").toString
+    val primary = new BucketCatalog(spark, primaryRoot)
+    val aapl = TimeBucketKey.parse("AAPL/1Min/OHLCV")
+    val msft = TimeBucketKey.parse("MSFT/1Min/OHLCV")
+    primary.create(aapl, ohlcv, isVariable = false)
+    primary.write(aapl, Seq((60L, 1.0)).toDF("Epoch", "Open"))
+    primary.write(msft, Seq((60L, 9.0)).toDF("Epoch", "Open"))
+    assert(new ReplicaSync(spark, primaryRoot, replicaRoot).sync() > 0)
+    val replica = new BucketCatalog(spark, replicaRoot)
+    assert(replica.listSymbols("OHLCV") == Seq("AAPL", "MSFT"))
+
+    // the replica has no manifest of its own: destroy takes the same
+    // rewrite path as on the primary, bootstrapping one
+    replica.destroy(msft)
+    assert(replica.listSymbols("OHLCV") == Seq("AAPL"))
+    assert(replica.read(msft).count() == 0)
+    assert(replica.read(aapl).collect().map(r =>
+      (r.getAs[Long]("Epoch"), r.getAs[Double]("Open"))).toSeq == Seq((60L, 1.0)))
+    assert(replica.listTimeframes("OHLCV", "MSFT").isEmpty)
+  }
+
   test("commit-log rotation: marker resume without rescan, gap falls back to full resync") {
     val primaryRoot = Files.createTempDirectory("graft-rot-primary").toString
     val replicaRoot = Files.createTempDirectory("graft-rot-replica").toString
