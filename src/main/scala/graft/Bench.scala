@@ -24,53 +24,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Local-mode-only: Hadoop's checksummed LocalFileSystem shadows
-      // every file with a .crc twin, doubling file ops — a pure
-      // emulation artifact (HDFS/S3 checksum server-side; this knob
-      // doesn't exist there). Measured on the 16k-file wide write:
-      // 142s -> 107s write, 17s -> 12s wildcard read (WideProbe).
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .getOrCreate()
-    // keep stdout clean for the JSON result lines
-    spark.sparkContext.setLogLevel("ERROR")
-    // warm up the JVM/codegen paths so the first timed query isn't
-    // charged for session bootstrap
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    SparkEntry.entry(spark).count()
-    // steady-state measurement: run every query once at the smallest
-    // scale factor so Janino compilation + JIT of each query's
-    // generated stage classes happens OUTSIDE the timed run (codegen
-    // compiles once per plan shape; a serving deployment pays it once,
-    // and first-compile was ~8s of a 13s run for the widest plans).
-    // Warmup failures are ignored — the timed run will surface them.
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try { fn(spark, warmDir).count(); () } catch { case _: Throwable => () }
-      }
-    }
+    // ERROR keeps stdout clean for the JSON result lines
+    val spark = session("ERROR")
+    warmUp(spark, SparkEntry.queries.keys)
 
     val runs = Seq(sfDir) ++
       Seq("SPARK_GRAFT_SF_DIR2", "SPARK_GRAFT_SF_DIR3")
         .flatMap(sys.env.get).filter(d => new java.io.File(d).isDirectory)
     var anyFailed = false
     val lines = runs.map { dir =>
-      val (line, compactLine, failed) = timedRun(spark, dir)
+      val (line, compactLines, failed) = timedRun(spark, dir)
       anyFailed ||= failed
-      // stdout carries the COMPACT line (times as %.3f): the driver
-      // keeps only a bounded tail of stdout and the full-precision
-      // line (~7.5 kB for 136 entries) overflowed it in r12/r13 —
-      // both rounds' per-query regression gates came up empty
-      // ("parsed": null). 1 ms resolution is far inside the box's
-      // ±30% ambient band, and the full-precision copy still lands in
-      // the JSON files below for floor records.
-      println(compactLine)
+      // stdout carries the COMPACT line (times as %.3f) and the
+      // summary line: the driver keeps only a bounded tail of stdout
+      // and the full-precision line (~7.5 kB for 136 entries)
+      // overflowed it in r12/r13 — both rounds' per-query regression
+      // gates came up empty ("parsed": null). 1 ms resolution is far
+      // inside the box's ±30% ambient band, and the full-precision
+      // copy still lands in the JSON files below for floor records.
+      println(compactLines)
       line
     }
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench.json")
@@ -92,10 +64,54 @@ object Bench {
     if (anyFailed) sys.exit(1)
   }
 
-  /** One timed pass over every query; returns (JSON line, anyFailed).
-    * SPARK_GRAFT_BENCH_ONLY (regex over names) narrows the pass for
-    * targeted local scale runs; the driver never sets it.
+  /** The session of every main in this package: GraftSession's shipped
+    * config on SPARK_GRAFT_CPUS local cores (default 4, and as many
+    * shuffle partitions) plus deployment settings only — no UI, the
+    * given log level, and Hadoop's raw local filesystem. The
+    * checksummed default shadows every file with a `.crc` twin,
+    * doubling file ops — a local emulation artifact (HDFS/S3 checksum
+    * server-side); measured on a 16k-file wide write: 142 s → 107 s
+    * write, 17 s → 12 s wildcard read.
     */
+  def session(logLevel: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    GraftSession.create(GraftSession.builder(s"local[$cpus]", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.log.level", logLevel)
+      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem"))
+  }
+
+  /** Steady-state discipline: warm the JVM and codegen paths so the
+    * first timed query isn't charged for session bootstrap, then run
+    * each named query once at the smallest scale factor so Janino
+    * compilation + JIT of its generated stage classes happens OUTSIDE
+    * the timed run (codegen compiles once per plan shape; a serving
+    * deployment pays it once, and first-compile was ~8s of a 13s run
+    * for the widest plans). Warmup failures are ignored — the timed
+    * run will surface them.
+    */
+  def warmUp(spark: SparkSession, names: Iterable[String]): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    SparkEntry.entry(spark).count()
+    val warmDir = "/root/testdata/sf0.001"
+    if (new java.io.File(warmDir).isDirectory)
+      for (name <- names; fn <- SparkEntry.queries.get(name))
+        try { fn(spark, warmDir).count(); () } catch { case _: Throwable => () }
+  }
+
+  /** Drop persisted relations left by the previous query: operators
+    * persist intermediates and rely on ContextCleaner GC, so across a
+    * pass the block store otherwise accumulates dead caches whose
+    * eviction churn bleeds into later measurements.
+    */
+  def clearCaches(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    // ... and RDD-level blocks too: localCheckpoint() (the CC
+    // fixpoint, the BPE merge loop) caches at the RDD layer, which
+    // clearCache() cannot reach
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
   /** Entries dominated by local-FS file churn (catalog write phases)
     * or many short stages: run-to-run variance on the shared builder
     * box is ±30% in the common band and single draws have shown >30×
@@ -116,21 +132,18 @@ object Bench {
     // r12 while three solo draws sat at 1.7-3.3x (BENCH_NOTES r12)
     "q_pipeline_contrastive")
 
+  /** One timed pass over every query; returns (full-precision JSON
+    * line, compact + summary stdout lines, anyFailed).
+    * SPARK_GRAFT_BENCH_ONLY (regex over names) narrows the pass for
+    * targeted local scale runs; the driver never sets it.
+    */
   private def timedRun(spark: SparkSession, sfDir: String): (String, String, Boolean) = {
     var failed = List.empty[(String, String)]
     val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ".*")
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.matches(only)).map { case (name, fn) =>
       def once(): Double = {
-        // drop persisted relations left by the previous query: operators
-        // persist intermediates and rely on ContextCleaner GC, so across
-        // a 48-query pass the block store otherwise accumulates dead
-        // caches whose eviction churn bleeds into later measurements
-        spark.sharedState.cacheManager.clearCache()
-        // ... and RDD-level blocks too: localCheckpoint() (the CC
-        // fixpoint, the BPE merge loop) caches at the RDD layer,
-        // which clearCache() cannot reach
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        clearCaches(spark)
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
           case e: Throwable =>
@@ -155,7 +168,7 @@ object Bench {
     // Locale.ROOT: the f"" interpolator is locale-sensitive and a
     // comma decimal separator would corrupt the JSON
     def r3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def r2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    def r4(v: Double) = String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     val qs3 = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val errMap = failed.reverse.map { case (k, m) =>
@@ -170,13 +183,22 @@ object Bench {
       .toSeq.sortBy(_._1)
     val recallMap = recallPairs.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val recallMap2 = recallPairs.map { case (k, v) => "\"" + k + "\":" + r2(v) }
+    // 4 decimals: simhash's recall contract is exactly 1.0, and %.2f
+    // would round a regression to 0.995 back up to it
+    val recallMap4 = recallPairs.map { case (k, v) => "\"" + k + "\":" + r4(v) }
       .mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errMap,"n_failed":${failed.size},"recall":$recallMap,"sf":"$sfDir"}"""
     val compactLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs3,"errors":$errMap,"n_failed":${failed.size},"recall":$recallMap2,"sf":"$sfDir"}"""
-    (line, compactLine, failed.nonEmpty)
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs3,"errors":$errMap,"n_failed":${failed.size},"recall":$recallMap4,"sf":"$sfDir"}"""
+    // 136 named times cannot fit the driver's 2,000-char stdout tail, so
+    // the LAST line is a bounded summary (~0.7 kB) that always parses
+    val slowest = results.sortBy(-_._2).take(12)
+      .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    val failedNames = failed.reverse.take(12).map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val summaryLine =
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},"n_failed":${failed.size},"failed":$failedNames,"recall":$recallMap4,"slowest":$slowest,"sf":"$sfDir"}"""
+    (line, compactLine + "\n" + summaryLine, failed.nonEmpty)
   }
 
   /** Recall@k of each approximate-by-design entry against its exact

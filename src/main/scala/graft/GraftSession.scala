@@ -2,7 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library entry point: a SparkSession tuned for this engine.
+/** Library entry point and the ONE session factory: the bench, the
+  * correctness dump, the diagnostics main, the test suites and the
+  * server all build their sessions here, so the measured and tested
+  * config is the shipped one. Callers add deployment settings only
+  * (UI, log level, filesystem implementation).
   *
   * Settings mirror what the reference gets from its purpose-built
   * storage and what every query here assumes:
@@ -10,9 +14,8 @@ import org.apache.spark.sql.SparkSession
   *  - ns parquet timestamps read as raw longs (Spark has no ns
   *    timestamp type; truncation discipline lives in
   *    [[graft.sources.Tables]]);
-  *  - AQE on with skew-join splitting — the runtime re-plan that
-  *    replaces hand-tuned salt factors for skewed symbols;
-  *  - the vector Catalyst expressions registered for SQL use.
+  *  - the vector and window Catalyst expressions registered for SQL
+  *    use ([[create]]).
   *
   * `shufflePartitions` should be ~2-3× total executor cores on a real
   * cluster; the default suits local development.
@@ -27,12 +30,13 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
 
-  /** Build the session and register the engine's SQL extensions. */
-  def create(master: String = "local[*]"): SparkSession = {
-    val s = builder(master).getOrCreate()
+  /** Build (or join) the session and register the engine's SQL
+    * functions. Registration replaces by name, so calling this again
+    * on a live session is harmless.
+    */
+  def create(b: SparkSession.Builder = builder()): SparkSession = {
+    val s = b.getOrCreate()
     org.apache.spark.sql.graft.VectorFunctions.register(s)
     org.apache.spark.sql.graft.WindowFunctions.register(s)
     s

@@ -7,7 +7,7 @@ import graft.operators.TimeSeries
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -540,8 +540,8 @@ class BucketCatalog(spark: SparkSession, root: String,
   // a meaningless lock on the driver's local disk
   // via getUri, not FileSystem.getScheme(): the base-class getScheme
   // THROWS UnsupportedOperationException for implementations that
-  // don't override it — RawLocalFileSystem among them, which Bench
-  // and the probes install for checksum-free local IO
+  // don't override it — RawLocalFileSystem among them, which Bench.session
+  // installs for checksum-free local IO
   private lazy val rootIsLocalFs = fs.getUri.getScheme == "file"
 
   // resolved (version, files, buckets, partition→maxEpoch ranges) of
@@ -1580,8 +1580,7 @@ class BucketCatalog(spark: SparkSession, root: String,
         s"manifest v$version of $attGroup is beyond the vacuum grace window: " +
           s"${missing.size} of ${files.size} files already deleted (first: ${missing.head})")
     if (files.isEmpty) None
-    else Some(spark.read.option("basePath", agPath(attGroup))
-      .parquet(files.map(f => s"${agPath(attGroup)}/$f"): _*))
+    else Some(readFiles(attGroup, files))
   }
 
   // DataFrame per (group, manifest version): building a DataFrame over
@@ -1600,8 +1599,7 @@ class BucketCatalog(spark: SparkSession, root: String,
           val cached = frameCache.get(attGroup)
           if (cached != null && cached._1 == v) Some(cached._2)
           else {
-            val df = spark.read.option("basePath", agPath(attGroup))
-              .parquet(files.map(f => s"${agPath(attGroup)}/$f"): _*)
+            val df = readFiles(attGroup, files)
             frameCache.put(attGroup, (v, df))
             Some(df)
           }
@@ -1612,8 +1610,31 @@ class BucketCatalog(spark: SparkSession, root: String,
         val p = new Path(agPath(attGroup))
         val hasData = fs.exists(p) &&
           fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.contains("="))
-        if (hasData) Some(spark.read.parquet(agPath(attGroup))) else None
+        if (hasData) Some(spark.read.schema(readSchema(attGroup)).parquet(agPath(attGroup)))
+        else None
     }
+
+  private def readFiles(attGroup: String, files: Seq[String]): DataFrame =
+    spark.read.schema(readSchema(attGroup)).option("basePath", agPath(attGroup))
+      .parquet(files.map(f => s"${agPath(attGroup)}/$f"): _*)
+
+  /** A group's files as the reader sees them: the data columns every
+    * write stores (symbol, the meta's declared columns, Nanoseconds for
+    * variable groups) and the typed partition columns. Handed to the
+    * reader so Spark infers neither: partition inference reads a group
+    * whose only timeframe is `1D` with a double `timeframe`.
+    */
+  private def readSchema(attGroup: String): StructType = {
+    val (variable, declared, _) = readMeta(attGroup)
+    val nanos =
+      if (variable && !declared.fieldNames.contains(Uda.NanosCol))
+        Seq(StructField(Uda.NanosCol, IntegerType))
+      else Nil
+    StructType(StructField("symbol", StringType) +:
+      (declared.fields.toSeq.map(f => StructField(f.name, f.dataType)) ++ nanos ++ Seq(
+        StructField("timeframe", StringType), StructField("year", IntegerType),
+        StructField("sbucket", IntegerType))))
+  }
 
   private def readAgOrFail(attGroup: String): DataFrame =
     readAg(attGroup).getOrElse(throw new IllegalArgumentException(

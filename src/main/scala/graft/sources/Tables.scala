@@ -15,13 +15,10 @@ import org.apache.spark.sql.functions._
   * truncation (`epoch_us`), keeping both sides bit-identical.
   */
 object Tables {
-  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // ns-precision parquet timestamps: read the raw INT64 nanos (Spark
-    // has no ns timestamp type) and derive (Epoch, Nanoseconds) from it.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Session config (UTC, ns parquet timestamps as raw INT64 nanos)
+    * comes from [[graft.GraftSession]]; reads never mutate it. */
+  def read(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** events with engine time columns:
     * ts_us (µs since epoch), Epoch (seconds), Nanoseconds (int).

@@ -83,6 +83,9 @@ class CatalogSpec extends SparkSpec {
     for ((sym, tfs) <- stored; tf <- tfs)
       cat.write(TimeBucketKey.parse(s"$sym/$tf/OHLCV"),
         Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close"))
+    // a group whose only timeframe parses as a number: partition type
+    // inference would read `timeframe=1D` as a double
+    cat.write(TimeBucketKey.parse("SPY/1D/DAILY"), Seq((86400L, 1.0)).toDF("Epoch", "Close"))
     // the same groups on a replica root: no manifest there, so every
     // listing answers from the pre-manifest distinct scans
     val replicaRoot = freshRoot()
@@ -99,7 +102,12 @@ class CatalogSpec extends SparkSpec {
           s"$name $sym/$tf")
       assert(c.latestYear(TimeBucketKey.parse("AAPL/1D/OHLCV")).isEmpty, name)
       assert(c.listTimeframesBySymbol("NOPE").isEmpty, name)
+      assert(c.listTimeframesBySymbol("DAILY") == Map("SPY" -> Set("1D")), name)
+      assert(c.listTimeframes("DAILY", "SPY") == Seq("1D"), name)
+      assert(c.read(TimeBucketKey.parse("SPY/1D/DAILY")).count() == 1, name)
     }
+    replica.destroy(TimeBucketKey.parse("SPY/1D/DAILY"))
+    assert(replica.listSymbols("DAILY").isEmpty)
   }
 
   test("query service: range + projection + LAST limit + wildcard") {
@@ -941,7 +949,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("local-ness probe survives RawLocalFileSystem (getScheme is unimplemented there)") {
-    // Bench/the probes install fs.file.impl = RawLocalFileSystem for
+    // Bench.session installs fs.file.impl = RawLocalFileSystem for
     // checksum-free local IO; Hadoop's BASE FileSystem.getScheme()
     // throws UnsupportedOperationException and RawLocalFileSystem
     // does not override it — the writer-lock local-ness probe must

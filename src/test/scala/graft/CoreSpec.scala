@@ -154,4 +154,28 @@ class CoreSpec extends SparkSpec {
     assert(sick.getMessage == "store sick: create failed",
       s"the original create failure must surface, got: ${sick.getMessage}")
   }
+
+  test("one session factory: the test session is GraftSession's, and only GraftSession builds sessions") {
+    // every option GraftSession.builder sets (master and shuffle
+    // partitions at SparkSpec's 4 cores) is live on the test session
+    val b = GraftSession.builder("local[4]", 4)
+    val shipped = b.getClass.getMethod("options").invoke(b)
+      .asInstanceOf[scala.collection.mutable.Map[String, String]]
+    assert(shipped.contains("spark.sql.legacy.parquet.nanosAsLong"))
+    for ((k, v) <- shipped)
+      assert(spark.conf.getOption(k).orElse(spark.sparkContext.getConf.getOption(k)).contains(v), k)
+    // ... with the engine's SQL functions registered
+    for (f <- Seq("cosine_sim", "ema_w"))
+      assert(spark.catalog.functionExists(f), f)
+    // no other source file builds a session of its own
+    val call = Seq("SparkSession", "builder()").mkString(".")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val files = scalaFiles(new java.io.File("src"))
+    assert(files.exists(_.getName == "GraftSession.scala"), "run from the project root")
+    val builders = files.filter(f => f.getName != "GraftSession.scala" &&
+      java.nio.file.Files.readString(f.toPath).contains(call))
+    assert(builders.isEmpty, builders.mkString(", "))
+  }
 }

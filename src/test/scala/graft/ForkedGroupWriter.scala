@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Forked-JVM catalog group writer for [[ForkSpec]]: a genuinely
@@ -24,15 +23,8 @@ object ForkedGroupWriter {
 
   def main(args: Array[String]): Unit = {
     val Array(rootUri, tbkStr, nStr, readyFile) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-forked-group-writer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.nolock.impl", classOf[NoLockFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkSpec.create(2, "ERROR",
+      "spark.hadoop.fs.nolock.impl" -> classOf[NoLockFileSystem].getName)
     import spark.implicits._
     try {
       val cat = new graft.catalog.BucketCatalog(spark, rootUri)

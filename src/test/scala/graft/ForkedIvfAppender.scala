@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM appender for [[ForkSpec]]: a genuinely separate PROCESS
   * firing batches into a shared IVF index root. The in-JVM fence
   * tests (TriggerSpec) use two trigger instances, which is faithful
@@ -34,14 +32,7 @@ object ForkedIvfAppender {
     val expiryMs = if (args.length > 3) args(3).toLong else 0L
     val stallMs = if (args.length > 4) args(4).toLong else 0L
     val stallMarker = if (args.length > 5) args(5) else ""
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-forked-appender")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkSpec.create(2, "ERROR")
     try {
       val trig = new graft.streaming.IvfIndexTrigger(
         spark, IvfFixtures.cents, idxPath, ticketExpiryMs = expiryMs)

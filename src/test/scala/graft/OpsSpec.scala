@@ -377,7 +377,6 @@ class OpsSpec extends SparkSpec {
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // independent naive check via SQL cross join on the 500-row table
     embs.select(col("vec_id"), col("embedding")).createOrReplaceTempView("e_tmp")
-    org.apache.spark.sql.graft.VectorFunctions.register(spark)
     val naive = spark.sql(
       """SELECT a.vec_id id1, b.vec_id id2
          FROM e_tmp a JOIN e_tmp b ON a.vec_id < b.vec_id

@@ -10,9 +10,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   * tailing on its own thread, a reader re-pinning snapshots on
   * another, vacuum and bounded compaction firing naturally as the
   * history grows, and periodic late data exercising the merge path
-  * between appends. IngestProbe proves per-commit cost; this proves
-  * the pieces don't corrupt each other when they overlap, which is the
-  * operating mode of a real deployment.
+  * between appends. The benchmark's ingest_cascade workload measures
+  * per-commit cost; this proves the pieces don't corrupt each other
+  * when they overlap, which is the operating mode of a real
+  * deployment.
   */
 class SoakSpec extends SparkSpec {
   import spark.implicits._

@@ -9,15 +9,14 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+  /** The shipped session ([[GraftSession]]) on `cores` local cores, with
+    * test deployment settings only: no UI, quiet logs. The forked test
+    * JVMs build theirs here too. */
+  def create(cores: Int, logLevel: String, extra: (String, String)*): SparkSession =
+    GraftSession.create(GraftSession.builder(s"local[$cores]", cores)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      .config("spark.log.level", logLevel)
+      .config(extra.toMap))
+
+  lazy val session: SparkSession = create(4, "WARN")
 }

@@ -185,7 +185,6 @@ class UdaSpec extends SparkSpec {
   }
 
   test("ema_w in raw Spark SQL: OVER without a frame takes the function's ROW frame") {
-    org.apache.spark.sql.graft.WindowFunctions.register(spark)
     Seq(("A", 1L, 1.0), ("A", 2L, 2.0), ("A", 3L, 3.0))
       .toDF("k", "t", "v").createOrReplaceTempView("ema_sql_in")
     val out = spark.sql(
