@@ -53,7 +53,12 @@ import scala.util.control.NonFatal
   * whose min epoch strictly exceeds it APPENDS a new file without
   * reading or rewriting the partition at all (no key can collide) —
   * O(batch) per commit, the reference's in-place year-file append
-  * re-expressed. Late or overlapping data falls back to the merge
+  * re-expressed. The range a write records comes from the batch's own
+  * metadata pass (its max Epoch, combined with the recorded range on a
+  * merge), so a commit never opens the files it just wrote; only
+  * partitions with no exact source (pre-manifest roots, the
+  * delete/destroy rewrites) read their staged footers. Late or
+  * overlapping data falls back to the merge
   * rewrite, and a partition reaching [[BucketCatalog.CompactAtFiles]]
   * live files is compacted by routing its next write through the
   * merge path — bounded smallfiles, 1/CompactAtFiles-amortized
@@ -602,6 +607,14 @@ class BucketCatalog(spark: SparkSession, root: String,
   private def sbucketCol(n: Int) =
     pmod(crc32(col("symbol").cast("binary")), lit(n.toLong)).cast("int")
 
+  /** A row's physical partition name, `timeframe=T/year=Y/sbucket=B` —
+    * the manifest's partition key, as a Column over the partition
+    * columns only, so a predicate on it prunes at the file index.
+    */
+  private val partitionKey =
+    concat(lit("timeframe="), col("timeframe"), lit("/year="), col("year").cast("string"),
+      lit("/sbucket="), col("sbucket").cast("string"))
+
   /** Upsert a batch of rows for one bucket. df must carry Epoch (long
     * seconds) + payload columns (+ Nanoseconds for variable buckets —
     * auto-added as 0 otherwise, matching utils/io/rowseries.go:176-181).
@@ -709,55 +722,82 @@ class BucketCatalog(spark: SparkSession, root: String,
             struct(valCols.map(col): _*)).as("__row"))
           .select(allCols.map(c => col(s"__row.$c").as(c)): _*)
       val keyed = keyedU.withColumn("sbucket", sbucketCol(nb))
-      // ONE metadata pass over the batch: per-(symbol, timeframe,
-      // year) min Epoch — bounded by the symbol cardinality the
-      // manifest's bucket registry lists anyway — yields the logical
-      // buckets, the touched physical partitions, and the batch's min
-      // epoch per partition for append routing.
-      val touched = keyed1.groupBy("symbol", "timeframe", "year")
-        .agg(min(col(Uda.EpochCol)).as("__mn"))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3)))
-      val logical = touched.map { case (s, t, _, _) => s"symbol=$s/timeframe=$t" }.toSet
-      val batchMin: Map[String, Long] = touched
-        .map { case (s, t, y, mn) => (s"timeframe=$t/year=$y/sbucket=${sbucketOf(s, nb)}", mn) }
-        .groupBy(_._1).map { case (p, ms) => p -> ms.map(_._2).min }
-      // APPEND fast path per partition: when the batch's min epoch
-      // strictly exceeds the partition's manifest-tracked max, no key
-      // can collide — the batch's rows land as a NEW file and the
-      // partition's existing files are never read or rewritten.
-      // Steady forward ingest (the 1-minute-bar cadence) is then
-      // O(batch) per commit instead of O(accumulated partition) — the
-      // merge-rewrite amplification the reference avoids with in-place
-      // year files. Late/overlapping data, unknown ranges (pre-feature
-      // manifests, post-delete partitions), and partitions whose file
-      // count reached CompactAtFiles take the merge path, which
-      // rewrites the partition into fresh files (compaction and range
-      // healing in the same commit).
-      val stored = resolveCurrent(attGroup)
-        .map(r => (r._4, r._2)).getOrElse((Map.empty[String, Long], Nil))
-      val fileCount: Map[String, Int] = stored._2
-        .groupBy(f => f.substring(0, f.lastIndexOf('/')))
-        .map { case (p, fsq) => p -> fsq.size }
-      val appendable = batchMin.keySet.filter { p =>
-        stored._1.get(p).exists(_ < batchMin(p)) &&
-          fileCount.getOrElse(p, 0) < CompactAtFiles
-      }
-      val mergeParts = (batchMin.keySet -- appendable).toSeq
-        .map { p =>
-          val Array(t, y, sb) = p.split("/").map(_.split("=")(1))
-          (t, y.toInt, sb.toInt)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // ONE metadata pass over the cached batch: per-(symbol,
+        // timeframe, year) min and max Epoch — bounded by the symbol
+        // cardinality the manifest's bucket registry lists anyway —
+        // yields the logical buckets, the touched physical partitions,
+        // the batch's min epoch per partition for append routing, and
+        // its max for the partition's new range. The cache is what
+        // keeps this pass from costing a second evaluation of `df`:
+        // the merge and the staged write below read the same cached
+        // rows, so the caller's plan (a cascade's candle aggregation,
+        // an INSERT's SELECT) runs once per commit.
+        val touched = keyed.groupBy("symbol", "timeframe", "year")
+          .agg(min(col(Uda.EpochCol)).as("__mn"), max(col(Uda.EpochCol)).as("__mx"))
+          .collect().map(r =>
+            (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3), r.getLong(4)))
+        val logical = touched.map { case (s, t, _, _, _) => s"symbol=$s/timeframe=$t" }.toSet
+        val batchSpan: Map[String, (Long, Long)] = touched
+          .map { case (s, t, y, mn, mx) =>
+            (s"timeframe=$t/year=$y/sbucket=${sbucketOf(s, nb)}", (mn, mx)) }
+          .groupBy(_._1).map { case (p, ms) =>
+            p -> ((ms.map(_._2._1).min, ms.map(_._2._2).max)) }
+        // APPEND fast path per partition: when the batch's min epoch
+        // strictly exceeds the partition's manifest-tracked max, no key
+        // can collide — the batch's rows land as a NEW file and the
+        // partition's existing files are never read or rewritten.
+        // Steady forward ingest (the 1-minute-bar cadence) is then
+        // O(batch) per commit instead of O(accumulated partition) — the
+        // merge-rewrite amplification the reference avoids with in-place
+        // year files. Late/overlapping data, unknown ranges (pre-feature
+        // manifests, post-delete partitions), and partitions whose file
+        // count reached CompactAtFiles take the merge path, which
+        // rewrites the partition into fresh files (compaction and range
+        // healing in the same commit).
+        val current = resolveCurrent(attGroup)
+        val stored = current.map(_._4).getOrElse(Map.empty[String, Long])
+        val fileCount: Map[String, Int] = current.map(_._2).getOrElse(Nil)
+          .groupBy(f => f.substring(0, f.lastIndexOf('/')))
+          .map { case (p, fsq) => p -> fsq.size }
+        val appendable = batchSpan.keySet.filter { p =>
+          stored.get(p).exists(_ < batchSpan(p)._1) &&
+            fileCount.getOrElse(p, 0) < CompactAtFiles
         }
-      val merged = readAg(attGroup) match {
-        case Some(old) if mergeParts.nonEmpty =>
-          val partsDf = spark.createDataFrame(mergeParts)
-            .toDF("timeframe", "year", "sbucket")
-          val oldAffected = old.join(broadcast(partsDf),
-            Seq("timeframe", "year", "sbucket"), "left_semi")
-          TimeSeries.unionKeepLast(
-            oldAffected.select(keyed.columns.map(col): _*), keyed, dedupKeys)
-        case _ => keyed
-      }
-      stageSwap(merged, attGroup, logicalBuckets = logical, appendParts = appendable)
+        val mergeParts = (batchSpan.keySet -- appendable).toSeq
+        // the merge reads its old rows through a LITERAL predicate on
+        // the partition columns, so the file index prunes the scan to
+        // exactly the merge partitions' files (manifest and replica
+        // roots alike, over the per-version cached frame)
+        val merged = readAg(attGroup) match {
+          case Some(old) if mergeParts.nonEmpty =>
+            val oldAffected = old.filter(partitionKey.isin(mergeParts: _*))
+            TimeSeries.unionKeepLast(
+              oldAffected.select(keyed.columns.map(col): _*), keyed, dedupKeys)
+          case _ => keyed
+        }
+        // each partition's new max Epoch, exact without reading a file
+        // back: an append partition's max is the batch's (eligibility
+        // put every stored row below the batch min); a merge keeps
+        // every old key, so a merge partition's max is the greater of
+        // its recorded range and the batch's; and a partition with no
+        // live file under a manifest holds only the batch. The rest —
+        // a pre-manifest root (a group's first commit, a replica) or a
+        // merge partition with files but no range entry — has no exact
+        // source here, and stageSwap reads its staged footers.
+        val newRanges: Map[String, Long] =
+          if (current.isEmpty) Map.empty
+          else batchSpan.flatMap { case (p, (_, mx)) =>
+            stored.get(p) match {
+              case Some(r) => Some(p -> math.max(r, mx))
+              case None if !fileCount.contains(p) => Some(p -> mx)
+              case None => None
+            }
+          }
+        stageSwap(merged, attGroup, logicalBuckets = logical, appendParts = appendable,
+          knownRanges = newRanges)
+      } finally keyed.unpersist(blocking = false)
     }
 
   /** Recursive walk of `k=v` partition directories under `base`,
@@ -1136,13 +1176,16 @@ class BucketCatalog(spark: SparkSession, root: String,
     * next [[recoverOrphanedStaging]] sweeps; the live snapshot is
     * never touched until the manifest rename. Partitions in
     * `clearIfUnstaged` that produced no staged output leave the live
-    * set (a rewrite that emptied them).
+    * set (a rewrite that emptied them). `knownRanges` gives the exact
+    * new max Epoch of staged partitions whose caller knows it; the
+    * others read it from their staged footers.
     */
   private def stageSwap(df: DataFrame, attGroup: String,
       clearIfUnstaged: Seq[String] = Nil,
       logicalBuckets: Set[String] = Set.empty,
       removeBuckets: Set[String] = Set.empty,
-      appendParts: Set[String] = Set.empty): Unit = {
+      appendParts: Set[String] = Set.empty,
+      knownRanges: Map[String, Long] = Map.empty): Unit = {
     val groupDir = agPath(attGroup)
     val staging = new Path(root, s"$StagingPrefix${attGroup}_${System.nanoTime()}")
     // repartition on the partition key so the staged write spreads
@@ -1176,15 +1219,16 @@ class BucketCatalog(spark: SparkSession, root: String,
         stagedParts += rel
         moves += ((rel, f))
       }
-      // per-partition max Epoch from the staged files' parquet footer
-      // stats — the manifest range registry the append fast-path
-      // consults. Exact in every path that reaches here: a MERGE
-      // partition's staged files are its complete new content, an
-      // APPEND partition's batch max exceeds the stored max by
-      // eligibility, and deleteRange/trim rewrites heal their entries
-      // to the kept rows' true max. ≤ files-per-commit footer reads.
-      // A partition records a range ONLY when every one of its staged
-      // files exposes Epoch stats — one unreadable footer among
+      // per-partition max Epoch — the manifest range registry the
+      // append fast path consults. The caller passes the exact new max
+      // where it knows one without reading a file (`knownRanges`; see
+      // writeMultiTf for why each of its entries is exact). Any other
+      // staged partition — a pre-manifest root, a merge partition with
+      // files but no range entry, the deleteRange/destroy rewrites —
+      // reads it from its staged files' parquet footer stats, exact
+      // because those files are the partition's complete new content.
+      // A partition records a footer range ONLY when every one of its
+      // staged files exposes Epoch stats — one unreadable footer among
       // readable ones would otherwise record an understated max and
       // let a later overlapping batch take the append path (duplicate
       // keys); partially-visible partitions fall into the clearRanges
@@ -1192,8 +1236,10 @@ class BucketCatalog(spark: SparkSession, root: String,
       val stagedRanges: Map[String, Long] = moves.toSeq
         .groupBy(_._1)
         .flatMap { case (rel, fsOfPart) =>
-          val maxes = fsOfPart.map { case (_, f) => footerMaxEpoch(f) }
-          if (maxes.forall(_.isDefined)) Some(rel -> maxes.flatten.max) else None
+          knownRanges.get(rel).map(rel -> _).orElse {
+            val maxes = fsOfPart.map { case (_, f) => footerMaxEpoch(f) }
+            if (maxes.forall(_.isDefined)) Some(rel -> maxes.flatten.max) else None
+          }
         }
       // the staged→live moves are independent renames into distinct
       // targets: run them on a bounded pool — serial, the ~7 ms

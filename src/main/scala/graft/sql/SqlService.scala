@@ -147,10 +147,12 @@ class SqlService(spark: SparkSession, catalog: Option[BucketCatalog] = None) {
         if (missing.nonEmpty) throw new IllegalArgumentException(
           s"Unable to find these columns: ${missing.mkString(", ")} needed for INSERT " +
             s"into target table `$tbkStr`; use column aliases to select them")
-        // rows inserted = rows the SELECT produced, observed on the
-        // write job itself (CollectMetrics rides the plan into the
-        // catalog's staging write) — the SELECT executes exactly once.
-        // Safe here: INSERT runs on a user thread, where the batch
+        // rows inserted = rows the SELECT produced, observed where the
+        // SELECT runs (CollectMetrics rides the plan into the catalog,
+        // which caches the batch and evaluates it once, in its metadata
+        // pass; the merge and the staged write read the cache) — the
+        // SELECT executes exactly once per INSERT. Safe here: INSERT
+        // runs on a user thread, where the batch
         // QueryExecutionListener backing Observation fires.
         val obs = org.apache.spark.sql.Observation()
         val result = raw.select(targets.map(col): _*)

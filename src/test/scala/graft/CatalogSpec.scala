@@ -906,6 +906,109 @@ class CatalogSpec extends SparkSpec {
       .map(_.getAs[Double]("Bid")).toSeq == Seq(1.0, 2.0))
   }
 
+  // one symbol per physical bucket: a write of symbol s touches only
+  // s's (timeframe, year, sbucket) partition
+  private def spreadSymbols(n: Int): Seq[String] =
+    ('A' to 'Z').map(_.toString)
+      .groupBy(BucketCatalog.symbolBucket(_, BucketCatalog.DefaultSymbolBuckets))
+      .values.map(_.min).toSeq.sorted.take(n)
+
+  private def partOf(f: String) = f.substring(0, f.lastIndexOf('/'))
+  private def part1Min(sym: String) =
+    s"timeframe=1Min/year=1970/sbucket=${BucketCatalog.symbolBucket(sym, BucketCatalog.DefaultSymbolBuckets)}"
+
+  test("partition ranges stay exact on every write route: a row at the max merges, max+1 appends") {
+    def bars(rows: (String, Long, Double)*) = rows.toDF("symbol", "Epoch", "V")
+    // a recorded max BELOW the true max lets a colliding row append (a
+    // duplicate key); one ABOVE it sends a strictly-later row through
+    // the merge. Probe both edges of `sym`'s partition after each route
+    def probe(cat: BucketCatalog, ag: String, sym: String, route: String): Unit = {
+      val part = part1Min(sym)
+      def partRows() = cat.readGroup(ag).get.filter(
+        col("timeframe") === "1Min" && col("year") === 1970 &&
+          col("sbucket") === BucketCatalog.symbolBucket(sym, BucketCatalog.DefaultSymbolBuckets))
+      val top = partRows().orderBy(col("Epoch").desc).select("symbol", "Epoch").head()
+      val (s, mx) = (top.getString(0), top.getLong(1))
+      val before = cat.liveFiles(ag).get.filter(partOf(_) == part).toSet
+      cat.writeMulti(ag, "1Min", bars((s, mx, -1.0)))
+      val afterMerge = cat.liveFiles(ag).get.toSet
+      assert(before.nonEmpty && (before & afterMerge).isEmpty,
+        s"$route: a row at the partition's max $mx must take the merge path")
+      val atMax = partRows().filter(col("symbol") === s && col("Epoch") === mx).collect()
+      assert(atMax.map(_.getAs[Double]("V")).toSeq == Seq(-1.0), s"$route: one row at $mx")
+      val all = partRows()
+      assert(all.count() == all.select("symbol", "Epoch").distinct().count(),
+        s"$route: one row per key")
+      cat.writeMulti(ag, "1Min", bars((s, mx + 1, -2.0)))
+      assert(afterMerge.subsetOf(cat.liveFiles(ag).get.toSet),
+        s"$route: a row at max+1 = ${mx + 1} must append and keep every prior file live")
+    }
+    val Seq(s1, s2, s3) = spreadSymbols(3)
+    val root = freshRoot()
+    val cat = new BucketCatalog(spark, root)
+    val ag = "RNG"
+    cat.writeMulti(ag, "1Min", bars((s1, 60L, 1.0), (s1, 120L, 2.0), (s2, 60L, 1.0)))
+    cat.writeMulti(ag, "1Min", bars((s1, 180L, 3.0), (s2, 180L, 3.0)))
+    probe(cat, ag, s1, "append")
+    cat.writeMulti(ag, "1Min", bars((s1, 90L, 4.0)))
+    probe(cat, ag, s1, "late merge into a partition with a range")
+    // forward appends until the partition holds CompactAtFiles files;
+    // the next write compacts it through the merge path
+    var e = 1000L
+    def files1() = cat.liveFiles(ag).get.count(partOf(_) == part1Min(s1))
+    while (files1() < BucketCatalog.CompactAtFiles) {
+      cat.writeMulti(ag, "1Min", bars((s1, e, 5.0)))
+      e += 60
+    }
+    cat.writeMulti(ag, "1Min", bars((s1, e, 6.0)))
+    assert(files1() < BucketCatalog.CompactAtFiles, "the write at the ceiling must compact")
+    probe(cat, ag, s1, "compaction")
+    cat.writeMulti(ag, "1Min", bars((s3, 300L, 1.0), (s3, 360L, 2.0)))
+    probe(cat, ag, s3, "new partition in an existing group")
+    cat.deleteRange(TimeBucketKey.parse(s"$s2/1Min/$ag"), 150L)
+    probe(cat, ag, s2, "deleteRange lowering the max")
+    // a replica root has no manifest: its first write bootstraps one,
+    // and a partition it did not stage has files but no range entry
+    val replicaRoot = freshRoot()
+    new graft.catalog.ReplicaSync(spark, root, replicaRoot).sync()
+    val rep = new BucketCatalog(spark, replicaRoot)
+    assert(rep.liveFiles(ag).isEmpty)
+    rep.writeMulti(ag, "1Min", bars((s1, e + 600, 7.0)))
+    probe(rep, ag, s1, "write on a replica root")
+    probe(rep, ag, s2, "replica partition without a range entry")
+  }
+
+  test("a late write opens only the files of the partitions it rewrites; appends open none") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countopen.impl", classOf[OpenCountFileSystem].getName)
+    val bare = freshRoot()
+    val cat = new BucketCatalog(spark, "countopen:" + bare)
+    val ag = "OPN"
+    val syms = spreadSymbols(4)
+    def bars(e: Long, ss: Seq[String]) = ss.map(s => (s, e, e.toDouble)).toDF("symbol", "Epoch", "V")
+    (1 to 3).foreach(i => cat.writeMulti(ag, "1Min", bars(60L * i, syms)))
+    // forward batch: every partition appends; the new ranges come from
+    // the batch, so no staged footer is opened and no old file read
+    OpenCountFileSystem.reset()
+    cat.writeMulti(ag, "1Min", bars(240L, syms))
+    val appendOpens = OpenCountFileSystem.parquetOpens()
+    assert(appendOpens.isEmpty, s"append route opened ${appendOpens.size} parquet files: $appendOpens")
+    // late row for one symbol: a merge of one partition with a known
+    // range opens that partition's live files and nothing else
+    val late = syms.head
+    val partFiles = cat.liveFiles(ag).get.filter(partOf(_) == part1Min(late))
+      .map(f => s"$bare/$ag/$f").toSet
+    OpenCountFileSystem.reset()
+    cat.writeMulti(ag, "1Min", bars(90L, Seq(late)))
+    val mergeOpens = OpenCountFileSystem.parquetOpens()
+    assert(mergeOpens.nonEmpty && mergeOpens.toSet.subsetOf(partFiles),
+      s"merge of ${part1Min(late)} opened ${mergeOpens.size} parquet files, " +
+        s"${mergeOpens.filterNot(partFiles).size} outside its ${partFiles.size} live files: " +
+        mergeOpens.filterNot(partFiles).take(5).mkString(", "))
+    assert(cat.read(TimeBucketKey.parse(s"$late/1Min/$ag")).select("Epoch").orderBy("Epoch").collect()
+      .map(_.getLong(0)).toSeq == Seq(60L, 90L, 120L, 180L, 240L))
+  }
+
   test("orphaned staging dirs are recoverable; commits leave a durable trail (executor/wal.go role)") {
     val root = freshRoot()
     val cat = new BucketCatalog(spark, root)

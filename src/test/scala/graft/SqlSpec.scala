@@ -89,6 +89,33 @@ class SqlSpec extends SparkSpec {
     assert(svc.sql("SELECT * FROM `AAPL/30Min/OHLCV`").count() == 31)
   }
 
+  test("INSERT ... SELECT evaluates its SELECT once, in-batch duplicate keys included") {
+    val (cat, svc) = freshCatalog(); seedBars(cat)
+    val evaluated = spark.sparkContext.longAccumulator("insert-select-rows")
+    spark.udf.register("count_select_row", (e: Long) => { evaluated.add(1); e })
+    cat.create(TimeBucketKey.parse("AAPL/1Min/ONCE"), ohlcv, isVariable = false)
+    // 120 bars plus a second copy of the last 30 with a higher Open:
+    // 150 input rows over 120 keys
+    val insert =
+      s"""INSERT INTO `AAPL/1Min/ONCE`
+          SELECT count_select_row(Epoch) AS Epoch, Open, Close FROM (
+            SELECT Epoch, Open, Close FROM `AAPL/1Min/OHLCV`
+            UNION ALL
+            SELECT Epoch, Open + 100 AS Open, Close FROM `AAPL/1Min/OHLCV`
+            WHERE Epoch >= ${t0 + 90 * 60})"""
+    // first INSERT creates the partition; the second overlaps every
+    // key, so it takes the merge path
+    for (round <- Seq("new partition", "merge")) {
+      evaluated.reset()
+      val res = svc.sql(insert).collect()
+      assert(res.head.getAs[Float]("Rows Written") == 150.0f, round)
+      assert(evaluated.value == 150L, s"$round: the SELECT ran over ${evaluated.value} rows")
+      val back = svc.sql("SELECT Epoch, Open FROM `AAPL/1Min/ONCE` ORDER BY Epoch").collect()
+      assert(back.length == 120, round)
+      assert(back.last.getAs[Double]("Open") == 10.0 + 119 + 100, round)
+    }
+  }
+
   test("INSERT with a column list maps select aliases onto destination columns") {
     val (cat, svc) = freshCatalog(); seedBars(cat)
     val dest = TimeBucketKey.parse("AAPL/5Min/OHLCV")
