@@ -56,8 +56,9 @@ import scala.util.control.NonFatal
   * re-expressed. The range a write records comes from the batch's own
   * metadata pass (its max Epoch, combined with the recorded range on a
   * merge), so a commit never opens the files it just wrote; only
-  * partitions with no exact source (pre-manifest roots, the
-  * delete/destroy rewrites) read their staged footers. Late or
+  * partitions with no exact source (a merge partition with files but
+  * no range entry, the delete/destroy/trim rewrites) read their staged
+  * footers. Late or
   * overlapping data falls back to the merge
   * rewrite, and a partition reaching [[BucketCatalog.CompactAtFiles]]
   * live files is compacted by routing its next write through the
@@ -71,9 +72,15 @@ import scala.util.control.NonFatal
   * published by atomic rename. Readers resolve the file list through
   * the current manifest — never by directory listing — so a reader
   * that planned a query just before a commit keeps reading the files
-  * of the snapshot it pinned. Files that leave the live set are
-  * retained on disk for [[BucketCatalog.VacuumGraceCommits]] more
-  * commits before vacuum deletes them: a read pinned at manifest V is
+  * of the snapshot it pinned. A file no manifest names is invisible:
+  * a group with no manifest yet holds no data, whatever its
+  * directories contain, so a crash inside a group's first commit
+  * leaves only orphans for [[recoverOrphanedStaging]]. Every root has
+  * this one read path, a replica's included: [[ReplicaSync]]
+  * publishes the replica's own manifest versions. Files that leave
+  * the live set are retained on disk for
+  * [[BucketCatalog.VacuumGraceCommits]] more commits before vacuum
+  * deletes them: a read pinned at manifest V is
   * safe until commit V+3 of the same group lands. This is the role the
   * reference's WAL plays for its single server process
   * (executor/wal.go:29-45), re-expressed in the append-only
@@ -756,10 +763,8 @@ class BucketCatalog(spark: SparkSession, root: String,
         // count reached CompactAtFiles take the merge path, which
         // rewrites the partition into fresh files (compaction and range
         // healing in the same commit).
-        val current = resolveCurrent(attGroup)
-        val stored = current.map(_._4).getOrElse(Map.empty[String, Long])
-        val fileCount: Map[String, Int] = current.map(_._2).getOrElse(Nil)
-          .groupBy(f => f.substring(0, f.lastIndexOf('/')))
+        val (_, currentFiles, _, stored) = resolveCurrent(attGroup)
+        val fileCount: Map[String, Int] = currentFiles.groupBy(partOf)
           .map { case (p, fsq) => p -> fsq.size }
         val appendable = batchSpan.keySet.filter { p =>
           stored.get(p).exists(_ < batchSpan(p)._1) &&
@@ -768,8 +773,8 @@ class BucketCatalog(spark: SparkSession, root: String,
         val mergeParts = (batchSpan.keySet -- appendable).toSeq
         // the merge reads its old rows through a LITERAL predicate on
         // the partition columns, so the file index prunes the scan to
-        // exactly the merge partitions' files (manifest and replica
-        // roots alike, over the per-version cached frame)
+        // exactly the merge partitions' files (over the per-version
+        // cached frame)
         val merged = readAg(attGroup) match {
           case Some(old) if mergeParts.nonEmpty =>
             val oldAffected = old.filter(partitionKey.isin(mergeParts: _*))
@@ -782,13 +787,13 @@ class BucketCatalog(spark: SparkSession, root: String,
         // put every stored row below the batch min); a merge keeps
         // every old key, so a merge partition's max is the greater of
         // its recorded range and the batch's; and a partition with no
-        // live file under a manifest holds only the batch. The rest —
-        // a pre-manifest root (a group's first commit, a replica) or a
-        // merge partition with files but no range entry — has no exact
-        // source here, and stageSwap reads its staged footers.
+        // live file holds only the batch — every partition of a group's
+        // first commit, since a group with no manifest holds no file.
+        // The rest, a merge partition with files but no range entry,
+        // has no exact source here, and stageSwap reads its staged
+        // footers.
         val newRanges: Map[String, Long] =
-          if (current.isEmpty) Map.empty
-          else batchSpan.flatMap { case (p, (_, mx)) =>
+          batchSpan.flatMap { case (p, (_, mx)) =>
             stored.get(p) match {
               case Some(r) => Some(p -> math.max(r, mx))
               case None if !fileCount.contains(p) => Some(p -> mx)
@@ -819,11 +824,14 @@ class BucketCatalog(spark: SparkSession, root: String,
     if (!fs.exists(base)) Nil else rec(base, "")
   }
 
-  /** All data files on disk under a group's partition dirs, rel paths
-    * — the bootstrap listing for pre-manifest roots (and the recovery
-    * sweep's view of what physically exists).
+  /** The partition dir of a group-relative file path. */
+  private def partOf(file: String): String = file.substring(0, file.lastIndexOf('/'))
+
+  /** All data files physically present under the group's partition
+    * dirs (live + grace + foreign), rel paths — the recovery sweep's
+    * and the integrity tool's disk view.
     */
-  private def listDataFilesOnDisk(attGroup: String): Seq[String] =
+  def dataFilesOnDisk(attGroup: String): Seq[String] =
     walkPartitionFiles(new Path(agPath(attGroup)))
       .map { case (rel, f) => s"$rel/${f.getName}" }
 
@@ -832,14 +840,9 @@ class BucketCatalog(spark: SparkSession, root: String,
   private def manifestDirPath(attGroup: String) = new Path(agPath(attGroup), ManifestDir)
   private def manifestName(v: Long) = f"$v%015d.json"
 
-  private def currentManifestVersion(attGroup: String): Option[Long] = {
-    val dir = manifestDirPath(attGroup)
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.endsWith(".json") && !n.startsWith("."))
-      .flatMap(n => scala.util.Try(n.stripSuffix(".json").toLong).toOption)
-      .maxOption
-  }
+  /** The group's newest manifest version; 0 when it has none. */
+  private def currentManifestVersion(attGroup: String): Long =
+    manifestVersions(attGroup).lastOption.getOrElse(0L)
 
   /** One manifest record, parsed. Two kinds: a SNAPSHOT ("kind"
     * absent — legacy — or "snapshot") lists the group's complete live
@@ -929,58 +932,54 @@ class BucketCatalog(spark: SparkSession, root: String,
   }
 
   /** (version, files, buckets, ranges) of the current manifest
-    * through the instance cache. Published versions are immutable, so
-    * a cache hit at the exact current version is always valid; a
-    * cache at a lower version serves as the fold base for the newer
-    * deltas (saving the snapshot re-read on the single-writer's hot
-    * path).
+    * through the instance cache; a group with no manifest is version 0,
+    * empty, and every version folds up from it. Published versions are
+    * immutable, so a cache hit at the exact current version is always
+    * valid; a cache at a lower version serves as the fold base for the
+    * newer deltas (saving the snapshot re-read on the single-writer's
+    * hot path).
     */
-  private def resolveCurrent(attGroup: String)
-      : Option[(Long, Seq[String], Seq[String], Map[String, Long])] =
-    currentManifestVersion(attGroup).map { v =>
-      val cached = Option(resolvedCache.get(attGroup)).filter(_._1 <= v)
-      val (files, buckets, ranges) = cached match {
-        case Some((cv, cf, cb, cr)) if cv == v => (cf, cb, cr)
-        case _ => resolveVersion(attGroup, v, cached)
+  private[catalog] def resolveCurrent(attGroup: String)
+      : (Long, Seq[String], Seq[String], Map[String, Long]) = {
+    val v = currentManifestVersion(attGroup)
+    val cached = Option(resolvedCache.get(attGroup)).filter(_._1 <= v)
+      .getOrElse((0L, Nil, Nil, Map.empty[String, Long]))
+    val r =
+      if (cached._1 == v) cached
+      else {
+        val (files, buckets, ranges) = resolveVersion(attGroup, v, Some(cached))
+        (v, files, buckets, ranges)
       }
-      val r = (v, files, buckets, ranges)
-      resolvedCache.put(attGroup, r)
-      r
-    }
+    resolvedCache.put(attGroup, r)
+    r
+  }
 
   /** Live data files (rel paths under the group dir) per the current
-    * manifest — the read snapshot. None ⇒ no manifest yet (a
-    * pre-manifest root; readers fall back to directory listing).
+    * manifest — the read snapshot. None ⇒ no manifest yet, so the group
+    * holds no data.
     */
   def liveFiles(attGroup: String): Option[Seq[String]] =
-    resolveCurrent(attGroup).map(_._2)
+    Some(resolveCurrent(attGroup)).filter(_._1 > 0).map(_._2)
 
   /** Existing buckets ("symbol=S/timeframe=T", possibly empty of
     * files) per the current manifest — None if no manifest.
     */
   def liveBuckets(attGroup: String): Option[Seq[String]] =
-    resolveCurrent(attGroup).map(_._3)
+    Some(resolveCurrent(attGroup)).filter(_._1 > 0).map(_._3)
 
   /** Files referenced by ANY retained manifest version (live + grace-
-    * retained) — None if no manifest. Anything on disk outside this
-    * set is foreign: a crashed move or an out-of-band write. Coverage
-    * without per-version resolution: a file live at retained version v
-    * is either in v's base snapshot (itself retained — pruning never
-    * drops a needed base) or in some retained delta's "added".
+    * retained); empty if the group has no manifest. Anything on disk
+    * outside this set is foreign: a crashed move or an out-of-band
+    * write. Coverage without per-version resolution: a file live at
+    * retained version v is either in v's base snapshot (itself
+    * retained — pruning never drops a needed base) or in some retained
+    * delta's "added".
     */
-  def referencedFiles(attGroup: String): Option[Set[String]] = {
-    val dir = manifestDirPath(attGroup)
-    if (!fs.exists(dir)) None
-    else Some(manifestVersions(attGroup).flatMap { v =>
+  def referencedFiles(attGroup: String): Set[String] =
+    manifestVersions(attGroup).flatMap { v =>
       val node = readManifestNode(attGroup, v)
       arr(node, "files") ++ arr(node, "added") ++ arr(node, "removed")
-    }.toSet)
-  }
-
-  /** All data files physically present under the group's partition
-    * dirs (live + grace + foreign) — the integrity tool's disk view.
-    */
-  def dataFilesOnDisk(attGroup: String): Seq[String] = listDataFilesOnDisk(attGroup)
+    }.toSet
 
   /** Atomic manifest flip with EXCLUSIVE version-slot semantics — the
     * commit-time CAS the lease fence's doc names as the zero-window
@@ -1071,13 +1070,15 @@ class BucketCatalog(spark: SparkSession, root: String,
   }
 
   /** Flip the group's manifest: every file under a partition in
-    * `replacedParts` leaves the live set, `addedFiles` join it. The
-    * flip (a rename) is the commit point; the old snapshot's files
-    * stay readable for [[VacuumGraceCommits]] more commits.
+    * `replacedParts`, and every file in `removedFiles`, leaves the live
+    * set; `addedFiles` join it. The flip (a rename) is the commit
+    * point; the old snapshot's files stay readable for
+    * [[VacuumGraceCommits]] more commits.
     */
   private def commitManifest(
       attGroup: String, replacedParts: Set[String], addedFiles: Seq[String],
-      logParts: Seq[String], addBuckets: Set[String] = Set.empty,
+      logParts: Seq[String], removedFiles: Set[String] = Set.empty,
+      addBuckets: Set[String] = Set.empty,
       removeBuckets: Set[String] = Set.empty,
       setRanges: Map[String, Long] = Map.empty,
       clearRanges: Set[String] = Set.empty): Unit = {
@@ -1085,29 +1086,9 @@ class BucketCatalog(spark: SparkSession, root: String,
     // superseded writer must be stopped HERE, before its staged files
     // can become visible
     if (!rootIsLocalFs) fenceWriterLease(Some(attGroup))
-    // bootstrap a pre-manifest root (a replica copy) from its
-    // directory listing — minus the files this very commit just moved
-    // in. symbol is a data column, not a path segment, so the
-    // (symbol, timeframe) registry costs a one-time distinct scan —
-    // only when the root already held files: a new group's first
-    // commit has nothing to register beyond its own buckets
-    val added = addedFiles.toSet
-    def partOf(f: String) = f.substring(0, f.lastIndexOf('/'))
-    val (prevV, prev, prevBuckets, prevRanges) = resolveCurrent(attGroup) match {
-      case Some((pv, files, buckets, ranges)) => (pv, files, buckets, ranges)
-      case None =>
-        val files = listDataFilesOnDisk(attGroup).filterNot(added)
-        val registry =
-          if (files.isEmpty) Nil
-          else readAg(attGroup) match {
-            case Some(old) => old.select("symbol", "timeframe").distinct()
-              .collect().toSeq
-              .map(r => s"symbol=${r.getString(0)}/timeframe=${r.getString(1)}")
-            case None => Nil
-          }
-        (0L, files, registry, Map.empty[String, Long])
-    }
-    val (dead, kept) = prev.partition(f => replacedParts.contains(partOf(f)))
+    val (prevV, prev, prevBuckets, prevRanges) = resolveCurrent(attGroup)
+    val (dead, kept) = prev.partition(f =>
+      replacedParts.contains(partOf(f)) || removedFiles.contains(f))
     val v = prevV + 1
     val newFiles = kept ++ addedFiles
     val newBuckets = (prevBuckets.toSet ++ addBuckets -- removeBuckets).toSeq
@@ -1128,15 +1109,47 @@ class BucketCatalog(spark: SparkSession, root: String,
     logCommit(attGroup, logParts)
   }
 
+  /** Make the group's manifest list exactly `files`, `buckets` and
+    * `ranges` — a replica publishing its primary's current state
+    * ([[ReplicaSync]]). `fetch` lands each listed file the current
+    * manifest does not name yet, before the flip; files that leave the
+    * live set go through the ordinary vacuum grace. Publishes nothing
+    * when the manifest already matches.
+    */
+  private[catalog] def adopt(attGroup: String, files: Seq[String], buckets: Seq[String],
+      ranges: Map[String, Long])(fetch: Seq[String] => Unit): Unit =
+    mutate(attGroup) {
+      val (_, mine, myBuckets, myRanges) = resolveCurrent(attGroup)
+      val added = files.filterNot(mine.toSet)
+      val gone = mine.toSet -- files
+      if (added.nonEmpty || gone.nonEmpty || buckets.toSet != myBuckets.toSet ||
+          ranges != myRanges) {
+        fetch(added)
+        val liveParts = files.map(partOf).toSet
+        commitManifest(attGroup, Set.empty, added,
+          logParts = (added ++ gone).map(partOf).distinct.sorted
+            .map(p => if (liveParts(p)) p else s"$p:cleared"),
+          removedFiles = gone,
+          addBuckets = buckets.toSet -- myBuckets,
+          removeBuckets = myBuckets.toSet -- buckets,
+          setRanges = ranges.filter { case (p, r) => !myRanges.get(p).contains(r) },
+          clearRanges = myRanges.keySet -- ranges.keySet)
+      }
+    }
+
   /** Physically delete the files that left the live set
     * [[VacuumGraceCommits]] commits ago (readers pinned to that
-    * snapshot have long finished), prune now-empty partition dirs, and
-    * drop manifest versions beyond [[ManifestRetention]].
+    * snapshot have long finished) and are not live again, prune
+    * now-empty partition dirs, and drop manifest versions beyond
+    * [[ManifestRetention]]. A file returns to the live set only on a
+    * replica, when a sync restores a primary file that a mutation on
+    * the replica had replaced.
     */
   private def vacuum(attGroup: String, committed: Long): Unit = {
     val graceV = committed - VacuumGraceCommits
     if (graceV >= 1 && fs.exists(new Path(manifestDirPath(attGroup), manifestName(graceV)))) {
-      val removed = arr(readManifestNode(attGroup, graceV), "removed")
+      val live = resolvedCache.get(attGroup)._2.toSet
+      val removed = arr(readManifestNode(attGroup, graceV), "removed").filterNot(live)
       val stop = new Path(agPath(attGroup))
       removed.foreach { rel =>
         try {
@@ -1223,8 +1236,8 @@ class BucketCatalog(spark: SparkSession, root: String,
       // append fast path consults. The caller passes the exact new max
       // where it knows one without reading a file (`knownRanges`; see
       // writeMultiTf for why each of its entries is exact). Any other
-      // staged partition — a pre-manifest root, a merge partition with
-      // files but no range entry, the deleteRange/destroy rewrites —
+      // staged partition — a merge partition with files but no range
+      // entry, the deleteRange/destroy/trim rewrites —
       // reads it from its staged files' parquet footer stats, exact
       // because those files are the partition's complete new content.
       // A partition records a footer range ONLY when every one of its
@@ -1535,12 +1548,13 @@ class BucketCatalog(spark: SparkSession, root: String,
           // must not have it idle-released out from under it
           if (!rootIsLocalFs) BucketCatalog.noteMutationStart(leaseKey(Some(ag)))
           if (!hadBefore) acquiredForSweep += ag
-          referencedFiles(ag).foreach { referenced =>
-            listDataFilesOnDisk(ag).filterNot(referenced).foreach { rel =>
-              try fs.delete(new Path(agPath(ag), rel), false)
-              catch { case NonFatal(e) =>
-                log.warn(s"orphan sweep of $ag/$rel failed: ${e.getMessage}")
-              }
+          // a group with no manifest references nothing: a crash inside
+          // its first commit leaves files that are all orphans
+          val referenced = referencedFiles(ag)
+          dataFilesOnDisk(ag).filterNot(referenced).foreach { rel =>
+            try fs.delete(new Path(agPath(ag), rel), false)
+            catch { case NonFatal(e) =>
+              log.warn(s"orphan sweep of $ag/$rel failed: ${e.getMessage}")
             }
           }
         } else log.warn(
@@ -1619,7 +1633,7 @@ class BucketCatalog(spark: SparkSession, root: String,
       throw new IllegalArgumentException(
         s"no manifest v$version for $attGroup (retained: ${manifestVersions(attGroup).mkString(", ")})")
     val files = resolveVersion(attGroup, version)._1
-    val onDisk = listDataFilesOnDisk(attGroup).toSet
+    val onDisk = dataFilesOnDisk(attGroup).toSet
     val missing = files.filterNot(onDisk)
     if (missing.nonEmpty)
       throw new IllegalStateException(
@@ -1637,28 +1651,19 @@ class BucketCatalog(spark: SparkSession, root: String,
   private val frameCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
 
-  private def readAg(attGroup: String): Option[DataFrame] =
-    resolveCurrent(attGroup) match {
-      case Some((v, files, _, _)) =>
-        if (files.isEmpty) None
-        else {
-          val cached = frameCache.get(attGroup)
-          if (cached != null && cached._1 == v) Some(cached._2)
-          else {
-            val df = readFiles(attGroup, files)
-            frameCache.put(attGroup, (v, df))
-            Some(df)
-          }
-        }
-      case None =>
-        // pre-manifest root (a replica): directory listing — any `k=v`
-        // partition dir at the top level means data
-        val p = new Path(agPath(attGroup))
-        val hasData = fs.exists(p) &&
-          fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.contains("="))
-        if (hasData) Some(spark.read.schema(readSchema(attGroup)).parquet(agPath(attGroup)))
-        else None
+  private def readAg(attGroup: String): Option[DataFrame] = {
+    val (v, files, _, _) = resolveCurrent(attGroup)
+    if (files.isEmpty) None
+    else {
+      val cached = frameCache.get(attGroup)
+      if (cached != null && cached._1 == v) Some(cached._2)
+      else {
+        val df = readFiles(attGroup, files)
+        frameCache.put(attGroup, (v, df))
+        Some(df)
+      }
     }
+  }
 
   private def readFiles(attGroup: String, files: Seq[String]): DataFrame =
     spark.read.schema(readSchema(attGroup)).option("basePath", agPath(attGroup))
@@ -1727,19 +1732,8 @@ class BucketCatalog(spark: SparkSession, root: String,
     * the manifest (grace-retained dead files don't resurface destroyed
     * symbols), no data scan.
     */
-  def listSymbols(attGroup: String): Seq[String] = liveBuckets(attGroup) match {
-    case Some(buckets) =>
-      buckets.map(_.split("/")(0).stripPrefix("symbol=")).distinct.sorted
-    case None =>
-      // pre-manifest root (a replica): symbol is a data column, not a
-      // path segment — one distinct scan. Replicas trade this scan for
-      // having no manifest of their own.
-      readAg(attGroup) match {
-        case Some(df) => df.select("symbol").distinct()
-          .collect().map(_.getString(0)).toIndexedSeq.sorted
-        case None => Nil
-      }
-  }
+  def listSymbols(attGroup: String): Seq[String] =
+    resolveCurrent(attGroup)._3.map(_.split("/")(0).stripPrefix("symbol=")).distinct.sorted
 
   /** Attribute groups present under the catalog root (directory walk,
     * no data scan) — the wire front's ListSymbols/GetInfo enumerate
@@ -1766,21 +1760,8 @@ class BucketCatalog(spark: SparkSession, root: String,
       .flatMap(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
 
   def listTimeframes(attGroup: String, symbol: String): Seq[String] =
-    liveBuckets(attGroup) match {
-      case Some(buckets) =>
-        buckets.filter(_.startsWith(s"symbol=$symbol/"))
-          .map(_.split("/")(1).stripPrefix("timeframe=")).distinct.sorted
-      case None =>
-        // pre-manifest root (a replica): ONE symbol-pruned distinct
-        // scan answers every timeframe (a per-timeframe isEmpty probe
-        // would re-resolve the frame and launch one job per candidate)
-        readAg(attGroup) match {
-          case Some(old) => old.filter(col("symbol") === symbol)
-            .select("timeframe").distinct()
-            .collect().map(_.getString(0)).toIndexedSeq.sorted
-          case None => Nil
-        }
-    }
+    resolveCurrent(attGroup)._3.filter(_.startsWith(s"symbol=$symbol/"))
+      .map(_.split("/")(1).stripPrefix("timeframe=")).distinct.sorted
 
   /** symbol → stored timeframes for a WHOLE attGroup in one manifest
     * resolution + one pass over the bucket list. The wildcard query
@@ -1791,30 +1772,17 @@ class BucketCatalog(spark: SparkSession, root: String,
     * checks × a full bucket-list filter each — O(S²) on the driver.
     */
   def listTimeframesBySymbol(attGroup: String): Map[String, Set[String]] =
-    liveBuckets(attGroup) match {
-      case Some(buckets) =>
-        buckets.iterator.map { b =>
-          val i = b.indexOf('/')
-          (b.substring(0, i).stripPrefix("symbol="),
-            b.substring(i + 1).stripPrefix("timeframe="))
-        }.toSeq.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
-      case None =>
-        // pre-manifest root (a replica): one distinct scan answers the
-        // whole map
-        readAg(attGroup) match {
-          case Some(old) => old.select("symbol", "timeframe").distinct()
-            .collect().toIndexedSeq
-            .groupMap(_.getString(0))(_.getString(1)).view.mapValues(_.toSet).toMap
-          case None => Map.empty
-        }
-    }
+    resolveCurrent(attGroup)._3.iterator.map { b =>
+      val i = b.indexOf('/')
+      (b.substring(0, i).stripPrefix("symbol="),
+        b.substring(i + 1).stripPrefix("timeframe="))
+    }.toSeq.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
 
   /** Drop one symbol/timeframe from a bucket (frontend Destroy,
     * frontend/write.go:182-210). Files are shared across symbols, so
     * the symbol's (timeframe, year, sbucket) slices are REWRITTEN
     * without its rows — bounded by 1/N of the group's years, through
-    * the same staged commit as every write (on a pre-manifest replica
-    * root, that commit bootstraps the replica's manifest).
+    * the same staged commit as every write.
     */
   def destroy(tbk: TimeBucketKey): Unit = mutate(tbk.attGroup) {
     val rel = s"symbol=${tbk.symbol}/timeframe=${tbk.timeframe}"

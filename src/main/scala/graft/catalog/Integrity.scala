@@ -43,17 +43,15 @@ object Integrity {
         val (_, variable) = cat.getInfo(ag)
         // the scan set: manifest-live files plus anything on disk NO
         // retained manifest references (grace-retained history is
-        // engine-managed, not a violation — excluded from both)
-        val (df, foreign) = cat.liveFiles(ag) match {
-          case Some(live) =>
-            val referenced = cat.referencedFiles(ag).getOrElse(Set.empty)
-            val foreign = cat.dataFilesOnDisk(ag).filterNot(referenced)
-            val all = live ++ foreign
-            if (all.isEmpty) throw new IllegalStateException("no data files")
-            (spark.read.option("basePath", s"$root/$ag")
-              .parquet(all.map(f => s"$root/$ag/$f"): _*), foreign)
-          case None => (spark.read.parquet(s"$root/$ag"), Seq.empty[String])
-        }
+        // engine-managed, not a violation — excluded from both). A
+        // group with no manifest has no live file, so every file on
+        // its disk is foreign
+        val live = cat.liveFiles(ag).getOrElse(Nil)
+        val foreign = cat.dataFilesOnDisk(ag).filterNot(cat.referencedFiles(ag))
+        val all = live ++ foreign
+        if (all.isEmpty) throw new IllegalStateException("no data files")
+        val df = spark.read.option("basePath", s"$root/$ag")
+          .parquet(all.map(f => s"$root/$ag/$f"): _*)
         val scoped = df.filter(col("year") >= yearStart && col("year") <= yearEnd)
         // files are shared across symbols, so foreign files report
         // per (timeframe, year) under symbol "*" — rows of their own,

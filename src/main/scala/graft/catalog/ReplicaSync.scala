@@ -3,22 +3,29 @@ package graft.catalog
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.SparkSession
-import scala.util.control.NonFatal
 
 /** Pull-based replica of a BucketCatalog root — the Spark-native shape
   * of the reference's master→replica replication, which streams WAL
   * transaction groups and replays them on the receiver
   * (replication/sender.go:14-48, receiver.go:12-40). Here the commit
-  * log IS the stream: each record names exactly the partitions a
-  * commit rewrote, so `sync()` copies only those partition directories
-  * (or deletes ones a commit cleared) and is idempotent — re-running
-  * after a partial failure converges.
+  * log IS the stream: its tail names the groups that changed since
+  * the marker, and `sync()` refreshes exactly those.
   *
-  * Progress is a marker file holding the last applied commit name;
-  * multiple commits touching one partition collapse to a single copy
-  * of its final state. The replica root is itself a valid
-  * BucketCatalog (meta files ride along with the first commit of each
-  * group), so a standby can serve reads with zero restore step.
+  * A refresh makes the replica's manifest list exactly the primary's
+  * current files, buckets and ranges. It copies the live files the
+  * replica's manifest does not list yet (file names are job-unique and
+  * immutable, so a listed file never needs a second copy), then
+  * publishes the replica's next manifest version through the replica
+  * catalog's own commit. The replica is therefore an ordinary catalog
+  * root with ordinary snapshot isolation: a reader sees whole versions
+  * only, a pinned read keeps its files through the replica's vacuum
+  * grace, and no live partition dir is ever deleted. Multiple commits
+  * touching one group collapse to a single publish of its final state,
+  * and re-running after a partial failure converges: a failed refresh
+  * publishes nothing and leaves the marker where it was.
+  *
+  * A mutation on the replica is an ordinary commit there; the next
+  * sync that refreshes its group restores the primary's state.
   */
 final class ReplicaSync(spark: SparkSession, primaryRoot: String, replicaRoot: String) {
   private val conf = spark.sparkContext.hadoopConfiguration
@@ -26,6 +33,7 @@ final class ReplicaSync(spark: SparkSession, primaryRoot: String, replicaRoot: S
   private val marker = new Path(replicaRoot, "_graft_replica_marker.txt")
   private val om = new ObjectMapper()
   private val primary = new BucketCatalog(spark, primaryRoot)
+  private val replica = new BucketCatalog(spark, replicaRoot)
 
   private def lastApplied(): String = {
     if (!fs.exists(marker)) return ""
@@ -43,11 +51,10 @@ final class ReplicaSync(spark: SparkSession, primaryRoot: String, replicaRoot: S
     * The commit log rotates ([[BucketCatalog.pruneCommitLog]]), so a
     * replica whose marker predates the oldest retained record cannot
     * know what the pruned commits touched. That gap is detected by
-    * sequence number (oldest retained > marker + 1) and handled by
-    * [[fullResync]] — a copy of every group's live snapshot — after
-    * which tailing resumes from the newest record. The same path
-    * bootstraps a FRESH replica attaching to a primary whose early
-    * history is already pruned (empty marker, oldest retained > 1).
+    * sequence number (oldest retained > marker + 1), and a fresh
+    * replica (no marker) is treated the same way: every primary group
+    * is refreshed, after which tailing resumes from the newest record.
+    * Otherwise only the groups the pending records name are refreshed.
     */
   def sync(): Int = {
     val logDir = new Path(primaryRoot, BucketCatalog.CommitLog)
@@ -58,89 +65,23 @@ final class ReplicaSync(spark: SparkSession, primaryRoot: String, replicaRoot: S
     val retained = fs.listStatus(logDir).toSeq.map(_.getPath)
       .filter(p => !p.getName.startsWith("."))
       .sortBy(_.getName)
-    if (retained.isEmpty) return 0
-    val seenSeq = if (seen.isEmpty) 0L else seqOf(seen)
-    if (seqOf(retained.head.getName) > seenSeq + 1) {
-      fullResync()
-      writeMarker(retained.last.getName)
-      return retained.size
-    }
-    val pending = retained.filter(_.getName > seen)
+    val gap = seen.isEmpty || retained.headOption.exists(p => seqOf(p.getName) > seqOf(seen) + 1)
+    val pending = if (gap) retained else retained.filter(_.getName > seen)
     if (pending.isEmpty) return 0
-
-    // last action per (attGroup, partition) wins — one copy of the
-    // final state instead of replaying intermediate rewrites
-    val finalActions = scala.collection.mutable.LinkedHashMap[(String, String), Boolean]()
-    pending.foreach { p =>
-      try {
-        val in = fs.open(p)
-        val node = om.readTree(in)
-        in.close()
-        val ag = node.get("attGroup").asText()
-        val parts = node.get("partitions")
-        (0 until parts.size()).foreach { i =>
-          val raw = parts.get(i).asText()
-          val cleared = raw.endsWith(":cleared")
-          val rel = raw.stripSuffix(":cleared")
-          finalActions.remove((ag, rel))
-          finalActions((ag, rel)) = cleared
-        }
-      } catch { case NonFatal(_) => /* skip torn record */ }
-    }
-
-    finalActions.foreach { case ((ag, rel), cleared) =>
-      val dst = new Path(new Path(replicaRoot, ag), rel)
-      if (cleared) {
-        if (fs.exists(dst)) fs.delete(dst, true)
-        // prune now-empty parents (year and timeframe dirs), as the
-        // primary's vacuum does, so no empty partition dir lingers
-        var parent = dst.getParent
-        val stop = new Path(replicaRoot, ag)
-        while (parent != null && parent != stop &&
-            fs.exists(parent) && fs.listStatus(parent).isEmpty) {
-          fs.delete(parent, true)
-          parent = parent.getParent
-        }
-      } else {
-        // copy only the partition's LIVE files per the primary's
-        // current manifest: its partition dirs also hold grace-retained
-        // dead files (snapshot isolation), which a whole-dir copy would
-        // resurrect as duplicate rows on the replica. The replica keeps
-        // clean dirs, so its own catalog reads are exact without a
-        // manifest of its own. A file vacuumed mid-copy is skipped;
-        // the next sync (which sees the newer commit) converges.
-        primary.liveFiles(ag) match {
-          case Some(files) =>
-            val mine = files.filter(_.startsWith(rel + "/"))
-            if (fs.exists(dst)) fs.delete(dst, true)
-            if (mine.nonEmpty) {
-              fs.mkdirs(dst)
-              mine.foreach { f =>
-                val src = new Path(new Path(primaryRoot, ag), f)
-                if (fs.exists(src))
-                  FileUtil.copy(fs, src, fs, new Path(new Path(replicaRoot, ag), f),
-                    false, true, conf)
-              }
-            }
-          case None => // pre-manifest primary: whole-dir copy
-            val src = new Path(new Path(primaryRoot, ag), rel)
-            if (fs.exists(src)) {
-              if (fs.exists(dst)) fs.delete(dst, true)
-              fs.mkdirs(dst.getParent)
-              FileUtil.copy(fs, src, fs, dst, false, true, conf)
-            }
-        }
-      }
-      // group meta rides along so the replica is a working catalog
-      val srcMeta = new Path(new Path(primaryRoot, ag), BucketCatalog.MetaFile)
-      val dstMeta = new Path(new Path(replicaRoot, ag), BucketCatalog.MetaFile)
-      if (fs.exists(srcMeta) && !fs.exists(dstMeta))
-        FileUtil.copy(fs, srcMeta, fs, dstMeta, false, true, conf)
-    }
-
+    // an unreadable record could name any group: refresh them all
+    val named = if (gap) Nil else pending.map(attGroupOf)
+    val groups =
+      if (gap || named.contains(None)) primary.listAttGroups() else named.flatten.distinct
+    groups.foreach(refresh(_))
     writeMarker(pending.last.getName)
     pending.size
   }
+
+  private def attGroupOf(record: Path): Option[String] =
+    scala.util.Try {
+      val in = fs.open(record)
+      try om.readTree(in).get("attGroup").asText() finally in.close()
+    }.toOption
 
   private def writeMarker(name: String): Unit = {
     val out = fs.create(marker, true)
@@ -148,38 +89,20 @@ final class ReplicaSync(spark: SparkSession, primaryRoot: String, replicaRoot: S
     out.close()
   }
 
-  /** Replace the replica's state with the primary's current live
-    * snapshot, group by group — the recovery path when the tail of the
-    * commit log no longer reaches this replica's marker (and the
-    * bootstrap for a fresh replica on a pruned primary). Copies only
-    * manifest-live files (grace-retained dead files would resurrect as
-    * duplicate rows), plus each group's meta so the replica stays a
-    * working catalog. Reads served DURING a resync may see a partially
-    * replaced group — same as the reference's replica bootstrap, which
-    * streams a snapshot before tailing (replication/sender.go:14-48).
+  /** Publish the primary's current state of one group on the replica.
+    * A vacuum on the primary can delete a file between the resolve and
+    * its copy, so a missing source re-resolves the primary once; a
+    * file that is still live and still missing throws, and the replica
+    * publishes no manifest naming it.
     */
-  private def fullResync(): Unit =
-    primary.listAttGroups().foreach { ag =>
-      val srcAg = new Path(primaryRoot, ag)
-      val dstAg = new Path(replicaRoot, ag)
-      if (fs.exists(dstAg)) fs.delete(dstAg, true)
-      primary.liveFiles(ag) match {
-        case Some(files) =>
-          fs.mkdirs(dstAg)
-          files.foreach { f =>
-            val src = new Path(srcAg, f)
-            if (fs.exists(src))
-              FileUtil.copy(fs, src, fs, new Path(dstAg, f), false, true, conf)
-          }
-        case None => // pre-manifest primary: dirs are the live set
-          if (fs.exists(srcAg)) {
-            fs.mkdirs(dstAg.getParent)
-            FileUtil.copy(fs, srcAg, fs, dstAg, false, true, conf)
-          }
-      }
-      val srcMeta = new Path(srcAg, BucketCatalog.MetaFile)
-      val dstMeta = new Path(dstAg, BucketCatalog.MetaFile)
-      if (fs.exists(srcMeta) && !fs.exists(dstMeta))
-        FileUtil.copy(fs, srcMeta, fs, dstMeta, false, true, conf)
-    }
+  private def refresh(ag: String, retry: Boolean = true): Unit = {
+    val (src, dst) = (new Path(primaryRoot, ag), new Path(replicaRoot, ag))
+    val dstMeta = new Path(dst, BucketCatalog.MetaFile)
+    if (!fs.exists(dstMeta))
+      FileUtil.copy(fs, new Path(src, BucketCatalog.MetaFile), fs, dstMeta, false, true, conf)
+    val (_, files, buckets, ranges) = primary.resolveCurrent(ag)
+    try replica.adopt(ag, files, buckets, ranges)(_.foreach(f =>
+      FileUtil.copy(fs, new Path(src, f), fs, new Path(dst, f), false, true, conf)))
+    catch { case _: java.io.FileNotFoundException if retry => refresh(ag, retry = false) }
+  }
 }

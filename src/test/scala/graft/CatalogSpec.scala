@@ -86,12 +86,13 @@ class CatalogSpec extends SparkSpec {
     // a group whose only timeframe parses as a number: partition type
     // inference would read `timeframe=1D` as a double
     cat.write(TimeBucketKey.parse("SPY/1D/DAILY"), Seq((86400L, 1.0)).toDF("Epoch", "Close"))
-    // the same groups on a replica root: no manifest there, so every
-    // listing answers from the pre-manifest distinct scans
+    // the same groups on a replica root: the replica publishes its own
+    // manifest, listing the primary's files and buckets
     val replicaRoot = freshRoot()
     new graft.catalog.ReplicaSync(spark, root, replicaRoot).sync()
     val replica = new BucketCatalog(spark, replicaRoot)
-    assert(replica.liveFiles("OHLCV").isEmpty)
+    assert(replica.liveFiles("OHLCV").map(_.toSet) == cat.liveFiles("OHLCV").map(_.toSet) &&
+      replica.liveBuckets("OHLCV").map(_.toSet) == cat.liveBuckets("OHLCV").map(_.toSet))
     for ((c, name) <- Seq(cat -> "manifest", replica -> "replica")) {
       val bulk = c.listTimeframesBySymbol("OHLCV")
       assert(bulk == stored.toMap.view.mapValues(_.toSet).toMap, name)
@@ -967,15 +968,16 @@ class CatalogSpec extends SparkSpec {
     probe(cat, ag, s3, "new partition in an existing group")
     cat.deleteRange(TimeBucketKey.parse(s"$s2/1Min/$ag"), 150L)
     probe(cat, ag, s2, "deleteRange lowering the max")
-    // a replica root has no manifest: its first write bootstraps one,
-    // and a partition it did not stage has files but no range entry
+    // a replica root publishes the primary's files, buckets and
+    // ranges in its own manifest; a write there is an ordinary commit
     val replicaRoot = freshRoot()
     new graft.catalog.ReplicaSync(spark, root, replicaRoot).sync()
     val rep = new BucketCatalog(spark, replicaRoot)
-    assert(rep.liveFiles(ag).isEmpty)
+    assert(rep.liveFiles(ag).map(_.toSet) == cat.liveFiles(ag).map(_.toSet) &&
+      rep.liveBuckets(ag).map(_.toSet) == cat.liveBuckets(ag).map(_.toSet))
     rep.writeMulti(ag, "1Min", bars((s1, e + 600, 7.0)))
     probe(rep, ag, s1, "write on a replica root")
-    probe(rep, ag, s2, "replica partition without a range entry")
+    probe(rep, ag, s2, "replica partition synced with its range")
   }
 
   test("a late write opens only the files of the partitions it rewrites; appends open none") {
@@ -986,7 +988,14 @@ class CatalogSpec extends SparkSpec {
     val ag = "OPN"
     val syms = spreadSymbols(4)
     def bars(e: Long, ss: Seq[String]) = ss.map(s => (s, e, e.toDouble)).toDF("symbol", "Epoch", "V")
-    (1 to 3).foreach(i => cat.writeMulti(ag, "1Min", bars(60L * i, syms)))
+    // a new group's first commit: a group with no manifest holds no
+    // file, so every partition's range comes from the batch and no
+    // staged footer is opened
+    OpenCountFileSystem.reset()
+    cat.writeMulti(ag, "1Min", bars(60L, syms))
+    val firstOpens = OpenCountFileSystem.parquetOpens()
+    assert(firstOpens.isEmpty, s"first commit opened ${firstOpens.size} parquet files: $firstOpens")
+    (2 to 3).foreach(i => cat.writeMulti(ag, "1Min", bars(60L * i, syms)))
     // forward batch: every partition appends; the new ranges come from
     // the batch, so no staged footer is opened and no old file read
     OpenCountFileSystem.reset()
@@ -1049,6 +1058,29 @@ class CatalogSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(fake),
       "unreferenced data file from a mid-commit crash must be swept")
     assert(cat.read(tbk).count() == 1, "referenced files must survive the sweep")
+
+    // a crash inside a group's FIRST commit, after the staged files
+    // moved in and before the first manifest flip, leaves the meta and
+    // a valid data file under a group with no manifest: no manifest
+    // names the file, so it is invisible, foreign and swept
+    val srcRoot = freshRoot()
+    val src = new BucketCatalog(spark, srcRoot)
+    src.write(TimeBucketKey.parse("AAPL/1Min/TORN"), Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close"))
+    val torn = src.liveFiles("TORN").get.head
+    val tornDir = java.nio.file.Path.of(root, "TORN")
+    java.nio.file.Files.createDirectories(tornDir.resolve(partOf(torn)))
+    Seq(BucketCatalog.MetaFile, torn).foreach(f =>
+      java.nio.file.Files.copy(java.nio.file.Path.of(srcRoot, "TORN", f), tornDir.resolve(f)))
+    val reader = new BucketCatalog(spark, root)
+    assert(reader.readGroup("TORN").isEmpty, "a group with no manifest must read as empty")
+    assert(reader.listSymbols("TORN").isEmpty)
+    val report = graft.catalog.Integrity.check(spark, root)
+      .filter(col("attGroup") === "TORN").collect()
+    assert(report.exists(r => !r.getAs[Boolean]("ok") && r.getAs[Long]("n_foreign_files") == 1L),
+      s"the torn commit's file must be reported foreign: ${report.mkString("; ")}")
+    reader.recoverOrphanedStaging()
+    assert(!java.nio.file.Files.exists(tornDir.resolve(torn)),
+      "a torn first commit's file must be swept")
   }
 
   test("local-ness probe survives RawLocalFileSystem (getScheme is unimplemented there)") {

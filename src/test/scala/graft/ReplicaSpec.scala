@@ -6,9 +6,10 @@ import org.apache.spark.sql.types._
 import java.nio.file.Files
 
 /** Commit-log replication: a replica catalog converges to the primary
-  * by applying only the partitions each commit names — the reference's
-  * WAL-streaming replication semantics (replication/sender.go:14-48,
-  * receiver.go:12-40) on the pull model.
+  * by refreshing only the groups each commit names, publishing its own
+  * manifest versions — the reference's WAL-streaming replication
+  * semantics (replication/sender.go:14-48, receiver.go:12-40) on the
+  * pull model.
   */
 class ReplicaSpec extends SparkSpec {
   import spark.implicits._
@@ -73,8 +74,8 @@ class ReplicaSpec extends SparkSpec {
     val replica = new BucketCatalog(spark, replicaRoot)
     assert(replica.listSymbols("OHLCV") == Seq("AAPL", "MSFT"))
 
-    // the replica has no manifest of its own: destroy takes the same
-    // rewrite path as on the primary, bootstrapping one
+    // the replica's manifest is its own: destroy there is an ordinary
+    // rewrite commit, as on the primary
     replica.destroy(msft)
     assert(replica.listSymbols("OHLCV") == Seq("AAPL"))
     assert(replica.read(msft).count() == 0)
@@ -138,5 +139,82 @@ class ReplicaSpec extends SparkSpec {
     // idempotent: nothing new → nothing applied
     assert(restarted.sync() == 0)
     assert(fresh.sync() == 0)
+  }
+
+  private def pairs(df: org.apache.spark.sql.DataFrame) =
+    df.select("Epoch", "Open").orderBy("Epoch").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  test("a reader pinned on a replica keeps its snapshot across a sync that rewrites its partition") {
+    val primaryRoot = Files.createTempDirectory("graft-pin-primary").toString
+    val replicaRoot = Files.createTempDirectory("graft-pin-replica").toString
+    val primary = new BucketCatalog(spark, primaryRoot)
+    val tbk = TimeBucketKey.parse("AAPL/1Min/PIN")
+    primary.create(tbk, ohlcv, isVariable = false)
+    primary.write(tbk, Seq((60L, 1.0), (120L, 2.0)).toDF("Epoch", "Open"))
+    val syncer = new ReplicaSync(spark, primaryRoot, replicaRoot)
+    assert(syncer.sync() == 1)
+    val replica = new BucketCatalog(spark, replicaRoot)
+    val pinned = replica.readGroup("PIN").get
+    // an upsert at the partition's max merges: the partition's whole
+    // file set is replaced on the primary
+    val before = primary.liveFiles("PIN").get.toSet
+    primary.write(tbk, Seq((120L, 2.5), (180L, 3.0)).toDF("Epoch", "Open"))
+    assert((primary.liveFiles("PIN").get.toSet & before).isEmpty)
+    assert(syncer.sync() == 1)
+    assert(pairs(pinned) == Seq((60L, 1.0), (120L, 2.0)),
+      "a pinned replica read must see the snapshot it pinned")
+    assert(pairs(replica.readGroup("PIN").get) == Seq((60L, 1.0), (120L, 2.5), (180L, 3.0)),
+      "a fresh replica read must see the sync")
+  }
+
+  test("sync never publishes a replica manifest that names a missing primary file") {
+    val primaryRoot = Files.createTempDirectory("graft-miss-primary").toString
+    val replicaRoot = Files.createTempDirectory("graft-miss-replica").toString
+    val primary = new BucketCatalog(spark, primaryRoot)
+    val tbk = TimeBucketKey.parse("AAPL/1Min/MISS")
+    primary.create(tbk, ohlcv, isVariable = false)
+    primary.write(tbk, Seq((60L, 1.0)).toDF("Epoch", "Open"))
+    val syncer = new ReplicaSync(spark, primaryRoot, replicaRoot)
+    assert(syncer.sync() == 1)
+    val replica = new BucketCatalog(spark, replicaRoot)
+    // a forward write appends one new file; lose it on the primary
+    val synced = primary.liveFiles("MISS").get.toSet
+    primary.write(tbk, Seq((120L, 2.0)).toDF("Epoch", "Open"))
+    val lost = primary.liveFiles("MISS").get.toSet -- synced
+    assert(lost.size == 1)
+    Files.delete(java.nio.file.Path.of(primaryRoot, "MISS", lost.head))
+    val marker = java.nio.file.Path.of(replicaRoot, "_graft_replica_marker.txt")
+    val (markerBefore, versionsBefore) = (Files.readString(marker), replica.manifestVersions("MISS"))
+    intercept[java.io.FileNotFoundException](syncer.sync())
+    assert(Files.readString(marker) == markerBefore, "a failed sync must not advance the marker")
+    assert(replica.manifestVersions("MISS") == versionsBefore, "a failed sync must publish nothing")
+    assert(pairs(replica.readGroup("MISS").get) == Seq((60L, 1.0)))
+  }
+
+  test("the next sync undoes a mutation on a replica; the replica's vacuum keeps the files it restored") {
+    val primaryRoot = Files.createTempDirectory("graft-undo-primary").toString
+    val replicaRoot = Files.createTempDirectory("graft-undo-replica").toString
+    val primary = new BucketCatalog(spark, primaryRoot)
+    val aapl = TimeBucketKey.parse("AAPL/1Min/UNDO")
+    val msft = TimeBucketKey.parse("MSFT/1Min/UNDO")
+    primary.create(aapl, ohlcv, isVariable = false)
+    primary.write(aapl, Seq((60L, 1.0)).toDF("Epoch", "Open"))
+    primary.write(msft, Seq((60L, 9.0)).toDF("Epoch", "Open"))
+    val syncer = new ReplicaSync(spark, primaryRoot, replicaRoot)
+    assert(syncer.sync() == 2)
+    val replica = new BucketCatalog(spark, replicaRoot)
+    replica.destroy(msft)
+    assert(replica.listSymbols("UNDO") == Seq("AAPL"))
+    // each sync publishes one replica version: the first restores MSFT's
+    // files, and the last runs the replica's vacuum past the grace of
+    // the destroy that had removed them
+    (1 to BucketCatalog.VacuumGraceCommits + 1).foreach { i =>
+      primary.write(aapl, Seq((60L + 60 * i, i.toDouble)).toDF("Epoch", "Open"))
+      assert(syncer.sync() == 1)
+    }
+    assert(replica.listSymbols("UNDO") == Seq("AAPL", "MSFT"))
+    assert(pairs(replica.read(msft)) == Seq((60L, 9.0)))
+    assert(pairs(replica.read(aapl)) == pairs(primary.read(aapl)))
   }
 }
