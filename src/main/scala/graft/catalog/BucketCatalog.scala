@@ -1707,12 +1707,28 @@ class BucketCatalog(spark: SparkSession, root: String,
     * ≤ |symbols| of the N physical buckets before the pushed symbol
     * predicate skips row groups inside them.
     */
-  def readMulti(attGroup: String, timeframe: String, symbols: Seq[String]): DataFrame = {
-    val base = readAgOrFail(attGroup).filter(col("timeframe") === timeframe)
-    val nb = layoutBuckets(attGroup)
-    val sbs = symbols.map(sbucketOf(_, nb)).distinct
-    dropLayoutCols(base.filter(col("sbucket").isin(sbs: _*))
+  def readMulti(attGroup: String, timeframe: String, symbols: Seq[String]): DataFrame =
+    dropLayoutCols(readSbuckets(attGroup, timeframe, symbols)
       .filter(col("symbol").isin(symbols: _*)))
+
+  /** Like the explicit-list [[readMulti]], but the pushed symbol
+    * predicate is the list's RANGE: two row-group stats comparisons,
+    * where a pushed `In` over thousands of symbols costs the parquet
+    * reader several times the scan itself. Rows of unlisted symbols
+    * inside the range come back — the caller owns exact membership
+    * (the downsample cascade joins its spans).
+    */
+  private[graft] def readSymbolRange(attGroup: String, timeframe: String,
+      symbols: Seq[String]): DataFrame =
+    dropLayoutCols(readSbuckets(attGroup, timeframe, symbols)
+      .filter(col("symbol").between(symbols.min, symbols.max)))
+
+  // one timeframe's rows, pruned to the partitions the symbols hash to
+  private def readSbuckets(attGroup: String, timeframe: String,
+      symbols: Seq[String]): DataFrame = {
+    val nb = layoutBuckets(attGroup)
+    readAgOrFail(attGroup).filter(col("timeframe") === timeframe)
+      .filter(col("sbucket").isin(symbols.map(sbucketOf(_, nb)).distinct: _*))
   }
 
   /** Partition-pruned scan of one bucket, time-ordered. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.catalog.BucketCatalog
 import graft.core.CandleDuration
-import graft.functions.{Candler, Uda}
+import graft.functions.Uda
 import graft.operators.{MarketCalendar, TimeQual}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -30,15 +30,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (aggtrigger recompute semantics, SURVEY §2.7).
   *
   * Scale: the recompute READ is bounded by LITERAL predicates, not by
-  * the join — the per-symbol (head, tail) spans are collected on the
-  * driver (one tiny agg, ≤ batch symbols rows), their global
-  * [min(head), max(tail)] window and symbol list are applied to the
-  * base scan as literal `Epoch` bounds + `symbol IN (...)` + a `year`
-  * range, so sbucket/year partition pruning and parquet Epoch
-  * row-group stats fire (the reference bounds this same read,
-  * aggtrigger.go:130-136); the broadcast spans join then refines to
-  * each symbol's own window. Per-batch read cost is proportional to
-  * the touched span, independent of base-table size.
+  * the join — the per-symbol (head, tail) spans are collected first
+  * (one tiny agg, ≤ batch symbols rows), and the base scan
+  * carries the symbols' sbucket partitions, a `year` range, the
+  * literal `Epoch` bounds of their global [min(head), max(tail)]
+  * window and the symbols' RANGE [min, max], so partition pruning and
+  * parquet row-group stats fire (the reference bounds this same read,
+  * aggtrigger.go:130-136). Exact membership comes from the broadcast
+  * spans join, which also refines each symbol to its own window: a
+  * pushed `symbol IN` over a batch's thousands of symbols cost the
+  * parquet reader several times the scan it pruned. Per-batch read
+  * cost is proportional to the touched span, independent of
+  * base-table size, and one grouped aggregation over that one scan
+  * builds every destination.
   */
 class DownsampleCascade(
     catalog: BucketCatalog,
@@ -61,21 +65,20 @@ class DownsampleCascade(
     cascade(spans, batch.sparkSession)
   }
 
-  /** Recompute destination candles for the windows covering `touched`
-    * (symbol, Epoch) rows.
-    */
   /** The bounded base-bucket slice feeding one recompute: per-symbol
     * (symbol, head, tail) spans → the base rows of every window those
     * spans touch, for the WIDEST destination (it contains every
     * narrower destination's affected windows — the reference queries
     * the destinations' UpperBound for the same reason,
-    * aggtrigger.go:130-136). Exposed for plan tests: the scan must
-    * carry LITERAL pushed Epoch bounds + symbol/year pruning.
+    * aggtrigger.go:130-136). The cascade reads it once, unpersisted:
+    * a single grouped aggregation tags and candles every destination
+    * from it. Exposed for plan tests: the scan must carry LITERAL
+    * pushed Epoch bounds, a pushed symbol range and sbucket/year
+    * partition pruning.
     */
   private[graft] def recomputeSlice(
       spark: org.apache.spark.sql.SparkSession,
       spans: Seq[(String, Long, Long)]): DataFrame = {
-    val symbols = spans.map(_._1)
     val widest = destinations.map(CandleDuration.parse).maxBy(_.approxSeconds)
     val lo = widest.truncateEpoch(spans.map(_._2).min)
     val hi = widest.ceilEpoch(spans.map(_._3).max)
@@ -83,10 +86,10 @@ class DownsampleCascade(
       .atZone(java.time.ZoneOffset.UTC).getYear
     val hiYear = java.time.Instant.ofEpochSecond(hi)
       .atZone(java.time.ZoneOffset.UTC).getYear
-    // readMulti(symbols) prunes sbucket partitions + pushes symbol IN;
-    // the literal year range prunes year partitions; the literal Epoch
-    // bounds reach parquet row-group stats (PlanSpec-pinned)
-    val base = catalog.readMulti(attGroup, baseTf, symbols)
+    // sbuckets and the literal year range prune partitions; the literal
+    // Epoch bounds and the symbol range reach parquet row-group stats
+    // (PlanSpec-pinned); the spans join below owns membership
+    val base = catalog.readSymbolRange(attGroup, baseTf, spans.map(_._1))
       .filter(col("year").between(loYear, hiYear))
       .drop("timeframe", "year")
       .filter(col(Uda.EpochCol) >= lit(lo) && col(Uda.EpochCol) < lit(hi))
@@ -107,41 +110,50 @@ class DownsampleCascade(
       .collect()
       .toSeq.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
 
+  /** Recompute destination candles for the windows covering `touched`
+    * (symbol, Epoch) rows.
+    */
   def cascade(touched: DataFrame): Unit =
     cascade(collectSpans(touched), touched.sparkSession)
 
+  /** Every destination's candles from ONE grouped aggregation over one
+    * scan of the slice: each base row is tagged once with the
+    * (timeframe, window start) of every destination whose affected
+    * window holds it — [truncate(head), ceil(tail)) of its symbol,
+    * market hours only for >= 1D destinations, like the reference's
+    * nasdaq filter (aggtrigger.go:237-246) — and a single
+    * groupBy(symbol, timeframe, window) builds the candles: open at the
+    * earliest (Epoch, Nanoseconds), close at the latest, high/low
+    * extrema, summed `sums` (the Candler shape, per destination).
+    */
   private def cascade(spans: Seq[(String, Long, Long)],
                       session: org.apache.spark.sql.SparkSession): Unit = {
     if (spans.isEmpty) return
     val slice = recomputeSlice(session, spans)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // every destination's candles land in ONE multi-timeframe commit:
-      // per-batch commit overhead stops scaling with |destinations|,
-      // and readers see all cascade levels move atomically (5Min never
-      // updates while 1H is still stale)
-      val perDest = destinations.map { d =>
-        val dest = CandleDuration.parse(d)
-        val affected = slice
-          .filter(col(Uda.EpochCol) >= dest.truncate(col("__head")) &&
-            col(Uda.EpochCol) < dest.ceil(col("__tail")))
-          .drop("__head", "__tail")
-        // >= 1D destinations honor the market-hours TimeQual, like the
-        // reference's nasdaq filter (aggtrigger.go:237-246)
-        val filtered = marketFilter match {
-          case Some(cal) if dest.approxSeconds >= 86400L =>
-            affected.filter(TimeQual.isMarketOpen(col(Uda.EpochCol), cal))
-          case _ => affected
-        }
-        val candles = Candler.candle(filtered, dest,
-          openOf = col("Open"), closeOf = col("Close"),
-          highOf = col("High"), lowOf = col("Low"),
-          sums = sums, avgs = Nil, groupCols = Seq("symbol"))
-        sums.foldLeft(candles)((df, c) => df.withColumnRenamed(s"${c}_SUM", c))
-          .withColumn("timeframe", lit(d))
+    val epoch = col(Uda.EpochCol)
+    val tags = destinations.map { d =>
+      val dest = CandleDuration.parse(d)
+      val affected = epoch >= dest.truncate(col("__head")) && epoch < dest.ceil(col("__tail"))
+      val kept = marketFilter match {
+        case Some(cal) if dest.approxSeconds >= 86400L =>
+          affected && TimeQual.isMarketOpen(epoch, cal)
+        case _ => affected
       }
-      catalog.writeMultiTf(attGroup, perDest.reduce(_ unionByName _))
-    } finally slice.unpersist(blocking = false)
+      when(kept, struct(lit(d).as("timeframe"), dest.truncate(epoch).as("w")))
+    }
+    val tkey = Uda.timeKey(slice)
+    val candles = slice.withColumn("__d", explode(array(tags: _*)))
+      .filter(col("__d").isNotNull)
+      .groupBy(col("symbol"), col("__d.timeframe").as("timeframe"), col("__d.w").as(Uda.EpochCol))
+      .agg(min_by(col("Open"), tkey).as("Open"),
+        (Seq(max(col("High")).as("High"), min(col("Low")).as("Low"),
+          max_by(col("Close"), tkey).as("Close")) ++
+          sums.map(c => sum(col(c)).as(c))): _*)
+    // every destination's candles land in ONE multi-timeframe commit:
+    // per-batch commit overhead stops scaling with |destinations|, and
+    // readers see all cascade levels move atomically (5Min never
+    // updates while 1H is still stale)
+    catalog.writeMultiTf(attGroup, candles)
   }
 
   /** Attach to a streaming source of base-TF rows: each micro-batch is

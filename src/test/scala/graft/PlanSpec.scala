@@ -251,6 +251,41 @@ class PlanSpec extends SparkSpec {
     assert(pf.contains("sbucket"), s"no sbucket partition pruning: $pf")
   }
 
+  test("a many-symbol recompute slice pushes a symbol range, never the batch's symbol list") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-cascw").toString
+    val cat = new graft.catalog.BucketCatalog(spark, root)
+    val rows = for { y <- 0 until 2; i <- 1 to 120 } yield
+      (s"S$i", 1704067200L + y * 31536000L + i * 60L,
+        i.toDouble, i + 1.0, i - 1.0, i.toDouble, 10.0)
+    cat.writeMulti("CASCW", "1Min",
+      rows.toDF("symbol", "Epoch", "Open", "High", "Low", "Close", "Volume"))
+    val casc = new graft.streaming.DownsampleCascade(cat, "CASCW", "1Min", Seq("5Min", "1H"))
+    // 60 batch symbols: a pushed `In` over them costs the parquet reader
+    // more than the scan it prunes — the spans join owns membership
+    val spans = (1 to 60).map(i => (s"S$i", 1704067200L + i * 60L, 1704067200L + i * 60L))
+    val slice = casc.recomputeSlice(spark, spans)
+    val scans = slice.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty, "no file scan under the recompute slice")
+    val pushed = scans.head.metadata("PushedFilters")
+    assert(!pushed.contains("In(symbol,"), s"the batch's symbol list reached parquet: $pushed")
+    assert(pushed.contains("GreaterThanOrEqual(symbol,") && pushed.contains("LessThanOrEqual(symbol,"),
+      s"no pushed symbol range: $pushed")
+    assert(pushed.contains("GreaterThanOrEqual(Epoch,") && pushed.contains("LessThan(Epoch,"),
+      s"no pushed Epoch bounds: $pushed")
+    val pf = scans.head.partitionFilters
+    assert(pf.mkString(";").contains("year"), s"no year partition pruning: $pf")
+    val sbuckets = pf.flatMap(_.collect {
+      case i: In if i.value.references.exists(_.name == "sbucket") => i.list.size
+      case i: InSet if i.child.references.exists(_.name == "sbucket") => i.hset.size })
+    assert(sbuckets.exists(_ > 8), s"no sbucket partition pruning over many buckets: $pf")
+    // the range admits S61..S120 too; the join keeps exactly the spans'
+    assert(slice.select("symbol").distinct().as[String].collect().toSet ==
+      spans.map(_._1).toSet)
+  }
+
   test("date-literal SQL over a catalog bucket pushes Epoch bounds to the scan") {
     import spark.implicits._
     import org.apache.spark.sql.execution.FileSourceScanExec

@@ -175,6 +175,97 @@ class StreamingSpec extends SparkSpec {
     assert(daily.head.getAs[Double]("Volume") == 1.0)
   }
 
+  /** The per-destination recompute the cascade must reproduce: for
+    * destination `d`, `Candler.candle` over the base rows of the
+    * windows each batch symbol's [head, tail] touches, market hours
+    * only at >= 1D — beside the stored `d` candles of those windows.
+    */
+  private def perDestination(cat: BucketCatalog, group: String, baseTf: String,
+      d: String, batch: org.apache.spark.sql.DataFrame,
+      cal: Option[MarketCalendar]): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    val dest = graft.core.CandleDuration.parse(d)
+    val spans = batch.groupBy("symbol")
+      .agg(min("Epoch").as("__head"), max("Epoch").as("__tail"))
+    def affected(df: org.apache.spark.sql.DataFrame) = df.join(spans, "symbol")
+      .filter(col("Epoch") >= dest.truncate(col("__head")) &&
+        col("Epoch") < dest.ceil(col("__tail")))
+      .drop("__head", "__tail")
+    val base = affected(cat.readMulti(group, baseTf))
+    val kept = cal match {
+      case Some(c) if dest.approxSeconds >= 86400L =>
+        base.filter(TimeQual.isMarketOpen(col("Epoch"), c))
+      case _ => base
+    }
+    val cols = Seq("symbol", "Epoch", "Open", "High", "Low", "Close", "Volume").map(col)
+    val expected = graft.functions.Candler.candle(kept, dest,
+      openOf = col("Open"), closeOf = col("Close"), highOf = col("High"), lowOf = col("Low"),
+      sums = Seq("Volume"), avgs = Nil, groupCols = Seq("symbol"))
+      .withColumnRenamed("Volume_SUM", "Volume").select(cols: _*)
+    val stored = affected(cat.readMulti(group, d)).select(cols: _*)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(_.toSeq)
+      .sortBy(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[Long]))
+    (rows(expected), rows(stored))
+  }
+
+  test("cascade candles equal the per-destination recompute: 5Min/1H/1D/1W, market hours, late revision") {
+    val (cat, _) = fresh()
+    val cal = MarketCalendar("UTC", "09:30:00", "16:00:00")
+    val dests = Seq("5Min", "1H", "1D", "1W")
+    val cascade = new DownsampleCascade(cat, "OHLCV", "1Min", dests, marketFilter = Some(cal))
+    // Monday..Wednesday bars, pre-market (09:15) included, three symbols
+    val days = Seq(0, 1, 2)
+    cascade.ingest((for {
+      s <- Seq("AAPL", "MSFT", "IBM"); day <- days
+      m <- Seq(-45, 0, 1, 2, 3, 4, 7, 70)
+    } yield bar(s, day * 1440 + m, 10.0 + (m + day) % 7, 1.0 + day)).toDS.toDF)
+    // the batch under test: a revision of AAPL's Monday 10:02 bar (its
+    // 5Min window closed long ago), a late pre-market MSFT bar, a
+    // Thursday IBM bar and a new symbol
+    val batch = Seq(bar("AAPL", 2, 30.0, 4.0), bar("AAPL", 1440 + 5, 9.0),
+      bar("MSFT", -40, 2.0, 2.0), bar("IBM", 3 * 1440 + 1, 11.0),
+      bar("GOOG", 0, 50.0), bar("GOOG", 1440 + 3, 51.0)).toDS.toDF
+    cascade.ingest(batch)
+    dests.foreach { d =>
+      val (expected, stored) = perDestination(cat, "OHLCV", "1Min", d, batch, Some(cal))
+      assert(expected.nonEmpty, s"$d: no affected candles")
+      assert(stored == expected, s"$d candles differ from the per-destination recompute")
+    }
+    // the revision reached every level, market hours honored at 1D
+    val daily = cat.read(TimeBucketKey.parse("AAPL/1D/OHLCV")).orderBy("Epoch").collect()
+    assert(daily.head.getAs[Double]("High") == 30.5)
+    assert(daily.head.getAs[Double]("Volume") == 10.0) // 7 in-hours bars: 6 × 1 + 4
+  }
+
+  test("cascade candles equal the per-destination recompute on a variable base, ns order within a second") {
+    val root = Files.createTempDirectory("graft-stream-ns").toString
+    val cat = new BucketCatalog(spark, root)
+    cat.create(TimeBucketKey.parse("X/1Sec/NS"), StructType(
+      StructField("Epoch", LongType) +: StructField("Nanoseconds", IntegerType) +:
+        ohlcv.fields.toSeq.tail), isVariable = true)
+    val cal = MarketCalendar("UTC", "09:30:00", "16:00:00")
+    val dests = Seq("1Min", "1H", "1D")
+    val cascade = new DownsampleCascade(cat, "NS", "1Sec", dests, marketFilter = Some(cal))
+    def tick(s: String, sec: Int, ns: Int, px: Double) =
+      (s, t0 + sec, ns, px, px + 0.5, px - 0.5, px + 0.25, 1.0)
+    val cols = Seq("symbol", "Epoch", "Nanoseconds", "Open", "High", "Low", "Close", "Volume")
+    // several ticks inside one second, out of nanosecond order
+    cascade.ingest(Seq(tick("AAPL", 5, 900, 3.0), tick("AAPL", 5, 100, 1.0),
+      tick("AAPL", 5, 500, 2.0), tick("AAPL", 70, 0, 4.0),
+      tick("MSFT", 5, 300, 7.0), tick("MSFT", 5, 200, 6.0)).toDF(cols: _*))
+    // late ticks land before and after the stored ones in that second
+    val batch = Seq(tick("AAPL", 5, 50, 8.0), tick("AAPL", 5, 950, 9.0),
+      tick("MSFT", 5, 250, 5.0)).toDF(cols: _*)
+    cascade.ingest(batch)
+    dests.foreach { d =>
+      val (expected, stored) = perDestination(cat, "NS", "1Sec", d, batch, Some(cal))
+      assert(expected.nonEmpty, s"$d: no affected candles")
+      assert(stored == expected, s"$d candles differ from the per-destination recompute")
+    }
+    val minute = cat.read(TimeBucketKey.parse("AAPL/1Min/NS")).orderBy("Epoch").collect()
+    assert(minute.head.getAs[Double]("Open") == 8.0) // ns 50 is the earliest
+    assert(minute.head.getAs[Double]("Close") == 9.25) // ns 950 is the latest
+  }
+
   test("LiveCandles: watermarked windowed aggregation updates candles and drops too-late rows") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[Tick]
