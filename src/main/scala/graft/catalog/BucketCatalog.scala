@@ -110,10 +110,12 @@ import scala.util.control.NonFatal
   * commit-time fence that stops a superseded writer before its
   * manifest flip. A root-level lease remains for root-scoped
   * mutations only (the startup orphan sweep), and group takeovers
-  * defer to it. Readers are unlimited in both dimensions. Commits
-  * leave a record in the commit log; [[recoverOrphanedStaging]]
-  * cleans up after a crashed writer; [[ReplicaSync]] builds read
-  * replicas from the commit log.
+  * defer to it. Readers are unlimited in both dimensions. The
+  * manifest flip is a commit's only record: once it lands, a commit
+  * leaves nothing outside its own group directory (its staging dir is
+  * deleted). [[recoverOrphanedStaging]] cleans
+  * up after a crashed writer; [[ReplicaSync]] builds read replicas by
+  * comparing each group's replica manifest with the primary's.
   */
 class BucketCatalog(spark: SparkSession, root: String,
                     leaseExpiryMs: Long = BucketCatalog.DefaultLeaseExpiryMs) {
@@ -1077,7 +1079,7 @@ class BucketCatalog(spark: SparkSession, root: String,
     */
   private def commitManifest(
       attGroup: String, replacedParts: Set[String], addedFiles: Seq[String],
-      logParts: Seq[String], removedFiles: Set[String] = Set.empty,
+      removedFiles: Set[String] = Set.empty,
       addBuckets: Set[String] = Set.empty,
       removeBuckets: Set[String] = Set.empty,
       setRanges: Map[String, Long] = Map.empty,
@@ -1106,7 +1108,6 @@ class BucketCatalog(spark: SparkSession, root: String,
         setRanges, clearRanges.toSeq)
     resolvedCache.put(attGroup, (v, newFiles, newBuckets, newRanges))
     vacuum(attGroup, v)
-    logCommit(attGroup, logParts)
   }
 
   /** Make the group's manifest list exactly `files`, `buckets` and
@@ -1114,27 +1115,26 @@ class BucketCatalog(spark: SparkSession, root: String,
     * ([[ReplicaSync]]). `fetch` lands each listed file the current
     * manifest does not name yet, before the flip; files that leave the
     * live set go through the ordinary vacuum grace. Publishes nothing
-    * when the manifest already matches.
+    * when the manifest already matches; returns whether it published.
     */
   private[catalog] def adopt(attGroup: String, files: Seq[String], buckets: Seq[String],
-      ranges: Map[String, Long])(fetch: Seq[String] => Unit): Unit =
+      ranges: Map[String, Long])(fetch: Seq[String] => Unit): Boolean =
     mutate(attGroup) {
       val (_, mine, myBuckets, myRanges) = resolveCurrent(attGroup)
       val added = files.filterNot(mine.toSet)
       val gone = mine.toSet -- files
-      if (added.nonEmpty || gone.nonEmpty || buckets.toSet != myBuckets.toSet ||
-          ranges != myRanges) {
+      val differs = added.nonEmpty || gone.nonEmpty ||
+        buckets.toSet != myBuckets.toSet || ranges != myRanges
+      if (differs) {
         fetch(added)
-        val liveParts = files.map(partOf).toSet
         commitManifest(attGroup, Set.empty, added,
-          logParts = (added ++ gone).map(partOf).distinct.sorted
-            .map(p => if (liveParts(p)) p else s"$p:cleared"),
           removedFiles = gone,
           addBuckets = buckets.toSet -- myBuckets,
           removeBuckets = myBuckets.toSet -- buckets,
           setRanges = ranges.filter { case (p, r) => !myRanges.get(p).contains(r) },
           clearRanges = myRanges.keySet -- ranges.keySet)
       }
+      differs
     }
 
   /** Physically delete the files that left the live set
@@ -1284,8 +1284,6 @@ class BucketCatalog(spark: SparkSession, root: String,
       commitManifest(attGroup,
         (stagedParts.toSet -- appendParts) ++ clearIfUnstaged,
         movedFiles,
-        logParts = stagedParts.toSeq.sorted ++
-          clearIfUnstaged.filterNot(stagedParts).map(_ + ":cleared"),
         addBuckets = logicalBuckets,
         removeBuckets = removeBuckets,
         setRanges = stagedRanges,
@@ -1326,164 +1324,6 @@ class BucketCatalog(spark: SparkSession, root: String,
         maxes.maxOption
       } finally r.close()
     } catch { case NonFatal(_) => None }
-
-  /** Append one record per committed swap to the catalog's commit log —
-    * the durable trail the reference keeps in its WAL transaction
-    * groups (executor/wal.go; replication tails the same records,
-    * replication/sender.go:14-48). A replica catalog can tail this
-    * file and re-read exactly the partitions each commit names.
-    * Best-effort: a commit-log write failure never fails the data
-    * commit (the data commit already happened at the manifest flip) —
-    * but it is WARNED, because replicas tailing the log would silently
-    * diverge otherwise.
-    */
-  private def logCommit(attGroup: String, partitions: Seq[String]): Unit =
-    try {
-      // Jackson, not string interpolation: symbol/attGroup names come
-      // from wire clients, and a quote or backslash in one must not
-      // yield a torn record a replica silently skips
-      val map = new java.util.LinkedHashMap[String, Any]()
-      map.put("ts", System.currentTimeMillis())
-      map.put("attGroup", attGroup)
-      map.put("partitions", partitions.asJava)
-      // one immutable file per commit: the local Hadoop FS has no
-      // append, and write-once files are exactly the shape an object
-      // store replays best. Names are a per-root MONOTONIC sequence
-      // seeded from the max existing commit name — restart- and
-      // clock-step-safe, unlike wall clock + an in-memory counter.
-      // Written to a dotfile then renamed so readers NEVER see a torn
-      // record (rename is the atomicity primitive here, same as the
-      // manifest flips).
-      //
-      // Multi-writer-safe naming (r11): the per-process counter seeds
-      // ONCE per (process, root) — two processes ingesting DIFFERENT
-      // attribute groups of one root (legal under the per-group
-      // lease) seed from the same directory max and then generate
-      // COLLIDING sequence numbers. A collided name is the one
-      // failure ReplicaSync cannot see: a reused sequence leaves no
-      // gap, so the lost record would silently never reach replicas.
-      // The publish rename is therefore the ALLOCATOR: the tmp name
-      // is unique per attempt, the no-overwrite rename into the
-      // sequence-named slot either wins the number or proves it is
-      // taken, and on a loss the counter re-seeds from the directory
-      // and the next free number is tried.
-      val dir = new Path(root, CommitLog)
-      fs.mkdirs(dir)
-      var attempt = 0
-      var published: Option[String] = None
-      while (published.isEmpty && attempt < 32) {
-        val name = f"${nextCommitSeq(dir)}%015d.json"
-        val tmp = new Path(dir,
-          s".tmp_${java.util.UUID.randomUUID().toString.take(8)}_$name")
-        val out = fs.create(tmp, false)
-        out.write(om.writeValueAsBytes(map))
-        out.close()
-        if (graft.core.FsOps.renameNoOverwrite(fs, tmp, new Path(dir, name)))
-          // the shared rename carries the checksummed-fs .crc twin, so
-          // commits don't each leak an orphan pruning never collects
-          published = Some(name)
-        else {
-          // a foreign group writer took this number first — clean the
-          // loser bytes (and a checksummed fs's .crc twin), re-seed
-          // from the directory, try the next free slot
-          try fs.delete(tmp, false) catch { case NonFatal(_) => () }
-          try fs.delete(new Path(dir, s".${tmp.getName}.crc"), false)
-          catch { case NonFatal(_) => () }
-          reseedCommitSeq(dir)
-          attempt += 1
-        }
-      }
-      if (published.isEmpty)
-        log.warn(s"commit record for $attGroup could not be published after " +
-          s"$attempt sequence-slot collisions — replicas tailing the commit " +
-          "log will miss this commit")
-      // keep the log bounded (the reference trims its WAL the same
-      // way); the listing this costs is O(retention), not O(history)
-      pruneCommitLog()
-    } catch {
-      case NonFatal(e) =>
-        log.warn(s"commit record write failed for $attGroup: ${e.getMessage} — " +
-          "replicas tailing the commit log will miss this commit")
-    }
-
-  private def maxCommitSeqOnDisk(dir: Path): Long =
-    if (!fs.exists(dir)) 0L
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filterNot(_.startsWith("."))
-      .map(_.takeWhile(_.isDigit)).filter(_.nonEmpty)
-      .map(_.toLong).maxOption.getOrElse(0L)
-
-  private def nextCommitSeq(dir: Path): Long =
-    commitSeqs.computeIfAbsent(dir.toString,
-      _ => new java.util.concurrent.atomic.AtomicLong(maxCommitSeqOnDisk(dir)))
-      .incrementAndGet()
-
-  /** After a name collision (a foreign group writer published a record
-    * at our number), advance the counter to at least the directory's
-    * true max — the colliding record proves a number >= ours exists on
-    * disk, so the next incrementAndGet lands on a free slot (or
-    * collides again against a still-faster foreign writer and retries).
-    * Monotonic update only: never move the counter backwards past
-    * numbers this process already claimed.
-    */
-  private def reseedCommitSeq(dir: Path): Unit = {
-    val onDisk = maxCommitSeqOnDisk(dir)
-    Option(commitSeqs.get(dir.toString))
-      .foreach(_.updateAndGet(cur => math.max(cur, onDisk)))
-  }
-
-  /** Commit records, oldest first (empty if no swaps committed).
-    * Bounded by [[BucketCatalog.CommitLogRetention]]: older applied
-    * records are rotated away by [[pruneCommitLog]] the way the
-    * reference trims flushed WAL transaction groups
-    * (executor/wal.go:463-487).
-    */
-  def commitHistory(): Seq[String] = {
-    val dir = new Path(root, CommitLog)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toIndexedSeq
-      .map(_.getPath).filter(p => !p.getName.startsWith(".")).sortBy(_.getName)
-      .map { p =>
-        val in = fs.open(p)
-        val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        in.close()
-        txt
-      }
-  }
-
-  /** Rotate the commit log down to its newest `keepLast` records — the
-    * reference's WAL trim (executor/wal.go:463-487), which the commit
-    * log otherwise lacks: without rotation every commit ever made
-    * stays listed, and `commitHistory()` plus every [[ReplicaSync]]
-    * restart pays O(total commits ever) filesystem listings. Runs
-    * automatically after each commit with the default retention, so
-    * the directory stays bounded with no operator action.
-    *
-    * A replica whose marker is older than the oldest retained record
-    * can no longer tail the log — [[ReplicaSync.sync]] detects that
-    * gap by sequence number and falls back to a full resync of the
-    * primary's live snapshot, so pruning is always safe; it only costs
-    * a lagging replica a bootstrap copy. Returns how many records were
-    * removed.
-    */
-  def pruneCommitLog(keepLast: Int = CommitLogRetention): Int = {
-    // deletes records other writers may be appending around — same
-    // cross-process lock as every other mutation (no-op when already
-    // held, which is the post-commit call path)
-    BucketCatalog.acquireProcessLock(root, rootIsLocalFs)
-    val dir = new Path(root, CommitLog)
-    if (!fs.exists(dir)) return 0
-    val names = fs.listStatus(dir).toIndexedSeq.map(_.getPath)
-      .filter(p => !p.getName.startsWith(".")).sortBy(_.getName)
-    val dead = names.dropRight(math.max(keepLast, 1))
-    dead.foreach { p =>
-      try fs.delete(p, false)
-      catch { case NonFatal(e) =>
-        log.warn(s"commit-log prune of ${p.getName} failed: ${e.getMessage}")
-      }
-    }
-    dead.size
-  }
 
   /** Clean up after a crashed writer: delete orphaned staging
     * directories, plus any data file no retained manifest references
@@ -1810,8 +1650,7 @@ class BucketCatalog(spark: SparkSession, root: String,
     val years = slice.map(_.filter(col("symbol") === tbk.symbol)
       .select("year").distinct().collect().map(_.getInt(0)).toSeq).getOrElse(Nil)
     if (years.isEmpty)
-      commitManifest(tbk.attGroup, Set.empty, Nil, Seq(s"$rel:cleared"),
-        removeBuckets = Set(rel))
+      commitManifest(tbk.attGroup, Set.empty, Nil, removeBuckets = Set(rel))
     else {
       val keep = slice.get.filter(col("year").isin(years: _*))
         .filter(col("symbol") =!= tbk.symbol)
@@ -1903,7 +1742,6 @@ object BucketCatalog {
     c.update(symbol.getBytes("UTF-8"))
     (c.getValue % n).toInt
   }
-  val CommitLog = "_graft_commits.jsonl"
   val ManifestDir = "_graft_manifest"
   val StagingPrefix = ".staging_"
   /** Commits a superseded file stays on disk after leaving the live
@@ -1918,11 +1756,6 @@ object BucketCatalog {
     * O(changed files) and a resolve folds at most this many deltas.
     */
   val ManifestCheckpointEvery = 8
-  /** Commit-log records kept by the automatic rotation — sized so any
-    * replica syncing within a reasonable lag tails incrementally; a
-    * replica further behind full-resyncs (see [[BucketCatalog.pruneCommitLog]]).
-    */
-  val CommitLogRetention = 512
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[BucketCatalog])
 
@@ -1931,10 +1764,6 @@ object BucketCatalog {
   private val writeLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[catalog] def writeLock(root: String, attGroup: String): Object =
     writeLocks.computeIfAbsent(s"$root#$attGroup", _ => new Object)
-
-  // per-root commit sequence, seeded from the max existing commit name
-  private val commitSeqs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
 
   /** Name of the per-root cross-process writer lock file. */
   val WriterLockFile = "_graft_writer.lock"

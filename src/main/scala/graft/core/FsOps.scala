@@ -4,10 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Shared filesystem commit primitive for every slot publisher in the
   * engine — the catalog's manifest version slots
-  * ([[graft.catalog.BucketCatalog]]), the IVF index's generation slots
-  * ([[graft.streaming.IvfIndexTrigger]]), and the commit-log record
-  * names. One definition so the no-overwrite requirement is stated
-  * (and audited) in exactly one place.
+  * ([[graft.catalog.BucketCatalog]]) and the IVF index's generation
+  * slots ([[graft.streaming.IvfIndexTrigger]]). One definition so the
+  * no-overwrite requirement is stated (and audited) in exactly one
+  * place.
   */
 object FsOps {
 

@@ -18,7 +18,7 @@ final case class TimeBucketKey(symbol: String, timeframe: String, attGroup: Stri
 
 object TimeBucketKey {
   // symbols/timeframes/groups become partition directory names and
-  // commit-log fields, and wire clients control them — restrict to the
+  // manifest JSON fields, and wire clients control them — restrict to the
   // reference's practical alphabet (BRK.A-style dots, dashes, plus the
   // query surface's ',' lists and '*'/'?' globs). Anything else (quotes,
   // backslashes, spaces, path separators) is rejected at the door.

@@ -67,10 +67,13 @@ class DownsampleCascade(
 
   /** The bounded base-bucket slice feeding one recompute: per-symbol
     * (symbol, head, tail) spans → the base rows of every window those
-    * spans touch, for the WIDEST destination (it contains every
-    * narrower destination's affected windows — the reference queries
-    * the destinations' UpperBound for the same reason,
-    * aggtrigger.go:130-136). The cascade reads it once, unpersisted:
+    * spans touch, for EVERY destination: the slice runs from the
+    * earliest window start to the latest window end over all of them
+    * (the reference queries the destinations' UpperBound for the same
+    * reason, aggtrigger.go:130-136). No single destination bounds the
+    * others in general — a week that began in February is not inside
+    * the month of the Saturday that closes it. The cascade reads it
+    * once, unpersisted:
     * a single grouped aggregation tags and candles every destination
     * from it. Exposed for plan tests: the scan must carry LITERAL
     * pushed Epoch bounds, a pushed symbol range and sbucket/year
@@ -79,9 +82,9 @@ class DownsampleCascade(
   private[graft] def recomputeSlice(
       spark: org.apache.spark.sql.SparkSession,
       spans: Seq[(String, Long, Long)]): DataFrame = {
-    val widest = destinations.map(CandleDuration.parse).maxBy(_.approxSeconds)
-    val lo = widest.truncateEpoch(spans.map(_._2).min)
-    val hi = widest.ceilEpoch(spans.map(_._3).max)
+    val dests = destinations.map(CandleDuration.parse)
+    val lo = dests.map(_.truncateEpoch(spans.map(_._2).min)).min
+    val hi = dests.map(_.ceilEpoch(spans.map(_._3).max)).max
     val loYear = java.time.Instant.ofEpochSecond(lo)
       .atZone(java.time.ZoneOffset.UTC).getYear
     val hiYear = java.time.Instant.ofEpochSecond(hi)
@@ -95,9 +98,10 @@ class DownsampleCascade(
       .filter(col(Uda.EpochCol) >= lit(lo) && col(Uda.EpochCol) < lit(hi))
     import spark.implicits._
     val spansDf = spans.toDF("symbol", "__head", "__tail")
+    val from = dests.map(_.truncate(col("__head"))).reduce(least(_, _))
+    val until = dests.map(_.ceil(col("__tail"))).reduce(greatest(_, _))
     base.join(broadcast(spansDf), Seq("symbol"))
-      .filter(col(Uda.EpochCol) >= widest.truncate(col("__head")) &&
-        col(Uda.EpochCol) < widest.ceil(col("__tail")))
+      .filter(col(Uda.EpochCol) >= from && col(Uda.EpochCol) < until)
   }
 
   /** One tiny driver collect — ≤ batch-symbols rows — so the base read

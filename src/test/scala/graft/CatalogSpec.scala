@@ -804,37 +804,6 @@ class CatalogSpec extends SparkSpec {
     }
   }
 
-  test("commit-record naming survives a foreign writer's sequence collision (parallel-group commit log)") {
-    val root = freshRoot()
-    val cat = new BucketCatalog(spark, root)
-    val tbk = TimeBucketKey.parse("AAPL/1Min/SEQ")
-    cat.write(tbk, Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close"))
-    val before = cat.commitHistory()
-    assert(before.size == 1, s"one commit -> one record, got $before")
-    // a FOREIGN process ingesting ANOTHER group of this root (legal
-    // under the per-group lease) seeds its own commit counter from the
-    // same directory max — simulate its next commit landing FIRST by
-    // publishing a record at exactly the number this process's cached
-    // counter will produce next. Pre-r11 the collision either dropped
-    // our record (warn-and-swallow) or clobbered the foreign one
-    // (POSIX rename overwrites) — and a reused number leaves NO gap,
-    // so ReplicaSync could never detect the loss.
-    val dir = java.nio.file.Paths.get(root, BucketCatalog.CommitLog)
-    Files.writeString(dir.resolve(f"${2L}%015d.json"),
-      """{"ts": 1, "attGroup": "FOREIGN_GROUP", "partitions": []}""")
-    cat.write(tbk, Seq((120L, 2.0, 2.5)).toDF("Epoch", "Open", "Close"))
-    val recs = cat.commitHistory()
-    assert(recs.size == 3, s"no record may be lost or clobbered: $recs")
-    assert(recs.count(_.contains("FOREIGN_GROUP")) == 1,
-      s"the foreign writer's record must survive intact: $recs")
-    assert(recs.count(_.contains("\"SEQ\"")) == 2,
-      s"both of this writer's commits must be published: $recs")
-    // the retry re-seeded PAST the collision: the counter stays
-    // monotonic for subsequent commits (no second collision cascade)
-    cat.write(tbk, Seq((180L, 3.0, 3.5)).toDF("Epoch", "Open", "Close"))
-    assert(cat.commitHistory().size == 4)
-  }
-
   test("forward ingest appends without rewriting; late data merges; file count stays bounded") {
     val root = freshRoot()
     val cat = new BucketCatalog(spark, root)
@@ -1023,18 +992,20 @@ class CatalogSpec extends SparkSpec {
     val cat = new BucketCatalog(spark, root)
     val tbk = TimeBucketKey.parse("AAPL/1Min/OHLCV")
     cat.create(tbk, ohlcv, isVariable = false)
+    // the manifest is the commit record: each commit adds exactly one
+    // version
     cat.write(tbk, Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close"))
-    // second write merges → stage-and-swap → one commit record
+    assert(cat.manifestVersions("OHLCV") == Seq(1L))
+    // second write merges → stage-and-swap → one more version
     cat.write(tbk, Seq((120L, 2.0, 2.5)).toDF("Epoch", "Open", "Close"))
-    val commits = cat.commitHistory()
-    assert(commits.nonEmpty)
-    assert(commits.last.contains("\"attGroup\":\"OHLCV\""))
-    // bucketed layout: commits name (timeframe, year, sbucket) slices
+    assert(cat.manifestVersions("OHLCV") == Seq(1L, 2L))
+    // bucketed layout: the manifest names (timeframe, year, sbucket) slices
     val sb = BucketCatalog.symbolBucket("AAPL", BucketCatalog.DefaultSymbolBuckets)
-    assert(commits.last.contains(s"timeframe=1Min/year=1970/sbucket=$sb"))
-    // deleteRange commits through the same path and logs too
+    assert(cat.liveFiles("OHLCV").get.forall(
+      _.startsWith(s"timeframe=1Min/year=1970/sbucket=$sb/")))
+    // deleteRange commits through the same path
     cat.deleteRange(tbk, 100L)
-    assert(cat.commitHistory().size > commits.size)
+    assert(cat.manifestVersions("OHLCV") == Seq(1L, 2L, 3L))
 
     // simulate a writer that crashed mid-stage: an orphan staging dir
     val orphan = java.nio.file.Path.of(root, ".staging_OHLCV_123")
@@ -1081,6 +1052,33 @@ class CatalogSpec extends SparkSpec {
     reader.recoverOrphanedStaging()
     assert(!java.nio.file.Files.exists(tornDir.resolve(torn)),
       "a torn first commit's file must be swept")
+  }
+
+  test("a commit writes nothing outside its group directory; neither does a replica sync") {
+    import scala.jdk.CollectionConverters._
+    def entries(r: String) = Files.list(java.nio.file.Path.of(r)).iterator().asScala
+      .map(_.getFileName.toString).toSet
+    val root = freshRoot()
+    val cat = new BucketCatalog(spark, root)
+    def bars(rows: (Long, Double)*) = rows.map { case (e, v) => (e, v, v + 0.5) }
+      .toDF("Epoch", "Open", "Close")
+    for (ag <- Seq("ROOTA", "ROOTB")) {
+      val aapl = TimeBucketKey.parse(s"AAPL/1Min/$ag")
+      val msft = TimeBucketKey.parse(s"MSFT/1Min/$ag")
+      cat.write(aapl, bars((60L, 1.0), (120L, 2.0)))
+      cat.write(aapl, bars((180L, 3.0))) // append
+      cat.write(aapl, bars((120L, 2.5))) // merge
+      cat.deleteRange(aapl, 100L, endEpoch = 150L)
+      cat.write(msft, bars((60L, 9.0)))
+      cat.destroy(msft)
+    }
+    // the local writer lock is the only root-level file a writer keeps
+    val groups = Set("ROOTA", "ROOTB", BucketCatalog.WriterLockFile)
+    assert(entries(root) == groups)
+    val replicaRoot = freshRoot()
+    assert(new graft.catalog.ReplicaSync(spark, root, replicaRoot).sync() == 2)
+    assert(entries(replicaRoot) == groups)
+    assert(entries(root) == groups)
   }
 
   test("local-ness probe survives RawLocalFileSystem (getScheme is unimplemented there)") {

@@ -5,11 +5,11 @@ import graft.core.TimeBucketKey
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 
-/** Commit-log replication: a replica catalog converges to the primary
-  * by refreshing only the groups each commit names, publishing its own
-  * manifest versions — the reference's WAL-streaming replication
-  * semantics (replication/sender.go:14-48, receiver.go:12-40) on the
-  * pull model.
+/** Manifest replication: a replica catalog converges to the primary
+  * by republishing each group whose replica manifest differs from the
+  * primary's current one, as its own manifest versions — the
+  * reference's WAL-streaming replication semantics
+  * (replication/sender.go:14-48, receiver.go:12-40) on the pull model.
   */
 class ReplicaSpec extends SparkSpec {
   import spark.implicits._
@@ -29,7 +29,7 @@ class ReplicaSpec extends SparkSpec {
     primary.write(tbk, Seq((120L, 2.5), (180L, 3.0)).toDF("Epoch", "Open"))
 
     val syncer = new ReplicaSync(spark, primaryRoot, replicaRoot)
-    assert(syncer.sync() > 0)
+    assert(syncer.sync() == 1)
     val replica = new BucketCatalog(spark, replicaRoot)
     def rows(c: BucketCatalog) =
       c.read(tbk).orderBy("Epoch").collect().map(r =>
@@ -37,12 +37,12 @@ class ReplicaSpec extends SparkSpec {
     assert(rows(replica) == Seq((60L, 1.0), (120L, 2.5), (180L, 3.0)))
     assert(rows(replica) == rows(primary))
 
-    // nothing new → no commits applied
+    // nothing new → no group republished
     assert(syncer.sync() == 0)
 
     // a range delete propagates (including cleared partitions)
     primary.deleteRange(tbk, 100L, endEpoch = 150L)
-    assert(syncer.sync() > 0)
+    assert(syncer.sync() == 1)
     assert(rows(replica) == Seq((60L, 1.0), (180L, 3.0)))
     assert(rows(replica) == rows(primary))
 
@@ -50,14 +50,14 @@ class ReplicaSpec extends SparkSpec {
     assert(replica.listSymbols("OHLCV") == Seq("AAPL"))
     assert(replica.getInfo("OHLCV")._1.fieldNames.toSeq == Seq("Epoch", "Open"))
 
-    // destroy propagates (it logs a cleared commit) — replicas must
-    // not keep serving destroyed buckets
+    // destroy propagates (it drops the bucket from the manifest) —
+    // replicas must not keep serving destroyed buckets
     primary.write(TimeBucketKey.parse("MSFT/1Min/OHLCV"),
       Seq((60L, 9.0)).toDF("Epoch", "Open"))
-    assert(syncer.sync() > 0)
+    assert(syncer.sync() == 1)
     assert(replica.listSymbols("OHLCV").sorted == Seq("AAPL", "MSFT"))
     primary.destroy(TimeBucketKey.parse("MSFT/1Min/OHLCV"))
-    assert(syncer.sync() > 0)
+    assert(syncer.sync() == 1)
     assert(replica.listSymbols("OHLCV") == Seq("AAPL"))
   }
 
@@ -70,7 +70,7 @@ class ReplicaSpec extends SparkSpec {
     primary.create(aapl, ohlcv, isVariable = false)
     primary.write(aapl, Seq((60L, 1.0)).toDF("Epoch", "Open"))
     primary.write(msft, Seq((60L, 9.0)).toDF("Epoch", "Open"))
-    assert(new ReplicaSync(spark, primaryRoot, replicaRoot).sync() > 0)
+    assert(new ReplicaSync(spark, primaryRoot, replicaRoot).sync() == 1)
     val replica = new BucketCatalog(spark, replicaRoot)
     assert(replica.listSymbols("OHLCV") == Seq("AAPL", "MSFT"))
 
@@ -84,61 +84,56 @@ class ReplicaSpec extends SparkSpec {
     assert(replica.listTimeframes("OHLCV", "MSFT").isEmpty)
   }
 
-  test("commit-log rotation: marker resume without rescan, gap falls back to full resync") {
-    val primaryRoot = Files.createTempDirectory("graft-rot-primary").toString
-    val replicaRoot = Files.createTempDirectory("graft-rot-replica").toString
+  test("convergence: every group converges; only a changed group republishes") {
+    val primaryRoot = Files.createTempDirectory("graft-conv-primary").toString
+    val replicaRoot = Files.createTempDirectory("graft-conv-replica").toString
     val primary = new BucketCatalog(spark, primaryRoot)
-    val tbk = TimeBucketKey.parse("AAPL/1Min/ROT")
-    primary.create(tbk, ohlcv, isVariable = false)
-    // a second group an old commit created and nothing touches again —
-    // the full-resync path must carry it even though every record
-    // naming it is pruned
-    val cold = TimeBucketKey.parse("COLD/1Min/ROTCOLD")
+    // a cold group written once, before every other commit, and never
+    // touched again — every sync must still carry it
+    val cold = TimeBucketKey.parse("COLD/1Min/CONVCOLD")
     primary.create(cold, ohlcv, isVariable = false)
     primary.write(cold, Seq((60L, 42.0)).toDF("Epoch", "Open"))
+    val tbk = TimeBucketKey.parse("AAPL/1Min/CONV")
+    primary.create(tbk, ohlcv, isVariable = false)
 
     def rows(c: BucketCatalog, k: TimeBucketKey) =
       c.read(k).orderBy("Epoch").collect().map(r =>
         (r.getAs[Long]("Epoch"), r.getAs[Double]("Open"))).toSeq
+    def write(i: Int) = primary.write(tbk, Seq((i * 60L, i.toDouble)).toDF("Epoch", "Open"))
 
-    (1 to 6).foreach(i => primary.write(tbk, Seq((i * 60L, i.toDouble)).toDF("Epoch", "Open")))
+    // a fresh syncer publishes both groups once
+    (1 to 6).foreach(write)
     val syncer = new ReplicaSync(spark, primaryRoot, replicaRoot)
-    assert(syncer.sync() == 7) // 6 ROT commits + 1 ROTCOLD
+    assert(syncer.sync() == 2)
     val replica = new BucketCatalog(spark, replicaRoot)
     assert(rows(replica, tbk) == rows(primary, tbk))
+    assert(rows(replica, cold) == Seq((60L, 42.0)))
 
-    // 4 more commits; prune so the oldest retained record is exactly
-    // marker+1 — a RESTARTED syncer must resume from the marker and
-    // apply only the 4 pending records, not rescan history
-    (7 to 10).foreach(i => primary.write(tbk, Seq((i * 60L, i.toDouble)).toDF("Epoch", "Open")))
-    assert(primary.pruneCommitLog(keepLast = 4) == 7)
+    // a restarted syncer, lagging more commits than the manifest
+    // retention keeps, collapses them into one publish of the hot group
+    // and leaves the cold group as it is
+    val coldVersions = replica.manifestVersions("CONVCOLD")
+    (7 to 7 + BucketCatalog.ManifestRetention).foreach(write)
     val restarted = new ReplicaSync(spark, primaryRoot, replicaRoot)
-    assert(restarted.sync() == 4)
+    val hotBefore = replica.manifestVersions("CONV").last
+    assert(restarted.sync() == 1)
+    assert(replica.manifestVersions("CONV").last == hotBefore + 1)
     assert(rows(replica, tbk) == rows(primary, tbk))
-    assert(rows(replica, tbk).map(_._2) == (1 to 10).map(_.toDouble))
+    assert(rows(replica, tbk).map(_._2) == (1 to 7 + BucketCatalog.ManifestRetention).map(_.toDouble))
+    assert(rows(replica, cold) == Seq((60L, 42.0)))
+    assert(replica.manifestVersions("CONVCOLD") == coldVersions)
 
-    // now lag the replica past the retention window: 3 commits land,
-    // rotation keeps only the last — the pruned middle commit makes
-    // tailing unsound, so sync must full-resync and still converge
-    (11 to 13).foreach(i => primary.write(tbk, Seq((i * 60L, i.toDouble)).toDF("Epoch", "Open")))
-    assert(primary.pruneCommitLog(keepLast = 1) == 6)
+    // a write to one group republishes exactly that group
+    write(100)
     assert(restarted.sync() == 1)
     assert(rows(replica, tbk) == rows(primary, tbk))
-    assert(rows(replica, cold) == Seq((60L, 42.0))) // cold group carried
-    assert(replica.listSymbols("ROT") == Seq("AAPL"))
+    assert(replica.manifestVersions("CONVCOLD") == coldVersions)
 
-    // a FRESH replica attaching to the pruned primary bootstraps the
-    // same way (empty marker, oldest retained record > 1)
-    val freshRoot = Files.createTempDirectory("graft-rot-fresh").toString
-    val fresh = new ReplicaSync(spark, primaryRoot, freshRoot)
-    assert(fresh.sync() == 1)
-    val freshCat = new BucketCatalog(spark, freshRoot)
-    assert(rows(freshCat, tbk) == rows(primary, tbk))
-    assert(rows(freshCat, cold) == Seq((60L, 42.0)))
-
-    // idempotent: nothing new → nothing applied
+    // idle: nothing differs, nothing is published
+    val versions = Seq("CONV", "CONVCOLD").map(replica.manifestVersions)
     assert(restarted.sync() == 0)
-    assert(fresh.sync() == 0)
+    assert(syncer.sync() == 0)
+    assert(Seq("CONV", "CONVCOLD").map(replica.manifestVersions) == versions)
   }
 
   private def pairs(df: org.apache.spark.sql.DataFrame) =
@@ -184,10 +179,8 @@ class ReplicaSpec extends SparkSpec {
     val lost = primary.liveFiles("MISS").get.toSet -- synced
     assert(lost.size == 1)
     Files.delete(java.nio.file.Path.of(primaryRoot, "MISS", lost.head))
-    val marker = java.nio.file.Path.of(replicaRoot, "_graft_replica_marker.txt")
-    val (markerBefore, versionsBefore) = (Files.readString(marker), replica.manifestVersions("MISS"))
+    val versionsBefore = replica.manifestVersions("MISS")
     intercept[java.io.FileNotFoundException](syncer.sync())
-    assert(Files.readString(marker) == markerBefore, "a failed sync must not advance the marker")
     assert(replica.manifestVersions("MISS") == versionsBefore, "a failed sync must publish nothing")
     assert(pairs(replica.readGroup("MISS").get) == Seq((60L, 1.0)))
   }
@@ -202,7 +195,7 @@ class ReplicaSpec extends SparkSpec {
     primary.write(aapl, Seq((60L, 1.0)).toDF("Epoch", "Open"))
     primary.write(msft, Seq((60L, 9.0)).toDF("Epoch", "Open"))
     val syncer = new ReplicaSync(spark, primaryRoot, replicaRoot)
-    assert(syncer.sync() == 2)
+    assert(syncer.sync() == 1) // both commits landed in one group
     val replica = new BucketCatalog(spark, replicaRoot)
     replica.destroy(msft)
     assert(replica.listSymbols("UNDO") == Seq("AAPL"))

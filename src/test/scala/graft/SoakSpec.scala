@@ -29,8 +29,9 @@ class SoakSpec extends SparkSpec {
     val done = new AtomicBoolean(false)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
 
-    // replica tail loop — applies whatever commits landed since its
-    // marker; mid-copy vacuum races are converged by the next pass
+    // replica sync loop — republishes the group whenever its replica
+    // manifest differs from the primary's; mid-copy vacuum races are
+    // converged by the next pass
     val syncer = new ReplicaSync(spark, primary, replica)
     val syncThread = new Thread(() => {
       while (!done.get()) {
@@ -104,8 +105,8 @@ class SoakSpec extends SparkSpec {
     assert(got.size == expected.size, s"${got.size} vs ${expected.size} keys")
     assert(got == expected.toMap, "primary rows diverge from last-write-wins")
 
-    // quiesced convergence: drain the tail, then the replica read
-    // equals the primary read exactly
+    // quiesced convergence: sync until no group is republished, then
+    // the replica read equals the primary read exactly
     var applied = 1
     while (applied > 0) applied = syncer.sync()
     val rep = new BucketCatalog(spark, replica).readMulti("BARS", "1Min")

@@ -236,6 +236,30 @@ class StreamingSpec extends SparkSpec {
     assert(daily.head.getAs[Double]("Volume") == 10.0) // 7 in-hours bars: 6 × 1 + 4
   }
 
+  test("cascade candles equal the per-destination recompute: 1W beside 1M, a week that straddles a month") {
+    val (cat, _) = fresh()
+    val dests = Seq("1W", "1M")
+    val cascade = new DownsampleCascade(cat, "OHLCV", "1Min", dests)
+    // day 0 = Monday 2024-02-26; its week closes on Sunday 03-03, in March
+    def at(s: String, day: Int, m: Int, px: Double) = bar(s, (49 + day) * 1440 + m, px)
+    cascade.ingest((for {
+      s <- Seq("AAPL", "MSFT"); day <- 0 to 4; m <- Seq(0, 1, 30)
+    } yield at(s, day, m, 10.0 + day + m % 7)).toDS.toDF)
+    // a Saturday 03-02 batch: its month began the day before, its week
+    // four days earlier
+    val batch = Seq(at("AAPL", 5, 0, 20.0), at("MSFT", 5, 3, 30.0)).toDS.toDF
+    cascade.ingest(batch)
+    dests.foreach { d =>
+      val (expected, stored) = perDestination(cat, "OHLCV", "1Min", d, batch, None)
+      assert(expected.nonEmpty, s"$d: no affected candles")
+      assert(stored == expected, s"$d candles differ from the per-destination recompute")
+    }
+    // the week candle still holds Monday's open and the whole week's volume
+    val week = cat.read(TimeBucketKey.parse("AAPL/1W/OHLCV")).collect()
+    assert(week.map(r => (r.getAs[Double]("Open"), r.getAs[Double]("Volume"))).toSeq ==
+      Seq((10.0, 16.0)))
+  }
+
   test("cascade candles equal the per-destination recompute on a variable base, ns order within a second") {
     val root = Files.createTempDirectory("graft-stream-ns").toString
     val cat = new BucketCatalog(spark, root)
