@@ -108,13 +108,13 @@ import scala.util.control.NonFatal
   * GROUP in `<ag>/_graft_writer.lease` with expiry-based takeover, a
   * monotonic fencing token won by exclusive-create claim files, and a
   * commit-time fence that stops a superseded writer before its
-  * manifest flip. A root-level lease remains for root-scoped
-  * mutations only (the startup orphan sweep), and group takeovers
-  * defer to it. Readers are unlimited in both dimensions. The
-  * manifest flip is a commit's only record: once it lands, a commit
-  * leaves nothing outside its own group directory (its staging dir is
-  * deleted). [[recoverOrphanedStaging]] cleans
-  * up after a crashed writer; [[ReplicaSync]] builds read replicas by
+  * manifest flip. Every lease is a group lease. Readers are unlimited
+  * in both dimensions. A commit stages inside its own group
+  * (`<ag>/.staging_<nanos>`), and the manifest flip is its only
+  * record: a commit never writes outside its group directory, and
+  * once it lands it leaves no staging dir behind.
+  * [[recoverOrphanedStaging]] cleans up after a crashed writer, one
+  * group mutation at a time; [[ReplicaSync]] builds read replicas by
   * comparing each group's replica manifest with the primary's.
   */
 class BucketCatalog(spark: SparkSession, root: String,
@@ -147,6 +147,10 @@ class BucketCatalog(spark: SparkSession, root: String,
 
   private def agPath(attGroup: String) = s"$root/$attGroup"
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // the root's one spelling for the in-process locks and lease
+  // bookkeeping: "/x", "file:/x" and "/x/" name one directory, and
+  // same-JVM catalogs on it must serialize on the same group locks
+  private lazy val rootKey = fs.makeQualified(new Path(root)).toString
   private val om = new ObjectMapper()
 
   private def mutate[T](attGroup: String)(body: => T): T = {
@@ -167,39 +171,33 @@ class BucketCatalog(spark: SparkSession, root: String,
     //    a heartbeat LEASE file PER GROUP (`<ag>/_graft_writer.lease`)
     //    enforces the contract — see [[ensureWriterLease]] for the
     //    acquire/renew/takeover rules and [[fenceWriterLease]] for
-    //    the commit-time fence a zombie writer cannot pass. The
-    //    root-level lease remains for root-scoped mutations only
-    //    (the startup orphan sweep).
+    //    the commit-time fence a zombie writer cannot pass.
     if (rootIsLocalFs) BucketCatalog.acquireProcessLock(root, rootIsLocalFs)
-    else ensureWriterLease(Some(attGroup))
-    writeLock(root, attGroup).synchronized {
+    else ensureWriterLease(attGroup)
+    writeLock(rootKey, attGroup).synchronized {
       // in-flight/last-mutation bookkeeping for the heartbeat's IDLE
       // RELEASE (r11): a group mutated once must not stay fenced to
       // this process for its whole lifetime — but a long-running
       // commit must never look idle mid-flight, so idleness is
       // "no mutation ACTIVE and none ENDED recently", not time since
       // the last lease renewal
-      if (!rootIsLocalFs) BucketCatalog.noteMutationStart(leaseKey(Some(attGroup)))
+      if (!rootIsLocalFs) BucketCatalog.noteMutationStart(leaseKey(attGroup))
       try body
-      finally if (!rootIsLocalFs) BucketCatalog.noteMutationEnd(leaseKey(Some(attGroup)))
+      finally if (!rootIsLocalFs) BucketCatalog.noteMutationEnd(leaseKey(attGroup))
     }
   }
 
   // ---- writer lease (non-local roots) --------------------------------
-  // Scope: Some(attGroup) = the group's lease (`<ag>/_graft_writer
-  // .lease`, ordinary mutations); None = the ROOT lease (root-scoped
-  // mutations: the startup orphan sweep). Every primitive below is
-  // keyed by the scope; group leases are independent, so writers on
-  // different groups of one root proceed in parallel.
+  // One lease per attribute group (`<ag>/_graft_writer.lease`); every
+  // primitive below is keyed by the group, and group leases are
+  // independent, so writers on different groups of one root proceed in
+  // parallel.
 
-  private def scopeDir(scope: Option[String]): Path =
-    scope.map(g => new Path(agPath(g))).getOrElse(new Path(root))
-  private def leasePath(scope: Option[String]) =
-    new Path(scopeDir(scope), WriterLeaseFile)
-  private def leaseKey(scope: Option[String]) =
-    new Path(root).toUri.toString + scope.map("#" + _).getOrElse("")
-  private def leaseLock(scope: Option[String]): Object =
-    writeLock(root, "__writer_lease" + scope.map(":" + _).getOrElse(""))
+  private def leasePath(attGroup: String) =
+    new Path(agPath(attGroup), WriterLeaseFile)
+  private def leaseKey(attGroup: String) = rootKey + "#" + attGroup
+  private def leaseLock(attGroup: String): Object =
+    writeLock(rootKey, "__writer_lease:" + attGroup)
 
   /** (writer, fencing token, wall-clock ms at last renewal), or None
     * if no lease file exists. A read landing in another writer's
@@ -208,11 +206,11 @@ class BucketCatalog(spark: SparkSession, root: String,
     * rather than reading as absent, because "absent" licenses a
     * destructive takeover and garbage must never do that.
     */
-  private def readLease(scope: Option[String]): Option[(String, Long, Long)] = {
+  private def readLease(attGroup: String): Option[(String, Long, Long)] = {
     def once(): Option[(String, Long, Long)] =
-      if (!fs.exists(leasePath(scope))) None
+      if (!fs.exists(leasePath(attGroup))) None
       else {
-        val in = fs.open(leasePath(scope))
+        val in = fs.open(leasePath(attGroup))
         try {
           val n = om.readTree(in)
           Some((n.get("writer").asText(), n.get("token").asLong(),
@@ -227,7 +225,7 @@ class BucketCatalog(spark: SparkSession, root: String,
         catch {
           case NonFatal(e) =>
             throw new IllegalStateException(
-              s"unreadable writer lease at ${leasePath(scope)} " +
+              s"unreadable writer lease at ${leasePath(attGroup)} " +
                 s"(${e.getMessage}); refusing to mutate — repair or " +
                 s"remove $WriterLeaseFile manually if it is corrupt", e)
         }
@@ -239,20 +237,30 @@ class BucketCatalog(spark: SparkSession, root: String,
     * lease-absent bootstrap. `release` stamps ts = 0 — an explicit
     * hand-back (always-expired, token preserved) so the next acquirer
     * takes over immediately with a bump instead of waiting out the
-    * expiry; used when a root-scoped mutation finishes.
+    * expiry; used by [[releaseWriterLease]].
     */
-  private def writeLease(scope: Option[String], token: Long,
+  private def writeLease(attGroup: String, token: Long,
       overwrite: Boolean, release: Boolean = false): Unit = {
     val ts = if (release) 0L else System.currentTimeMillis()
     val body = s"""{"writer": "${BucketCatalog.processWriterId}", """ +
       s""""token": $token, "ts": $ts}"""
-    val out = fs.create(leasePath(scope), overwrite)
+    val out = fs.create(leasePath(attGroup), overwrite)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private def claimPath(scope: Option[String], token: Long) =
-    new Path(scopeDir(scope), s"$WriterLeaseFile.claim.$token")
+  private def claimPath(attGroup: String, token: Long) =
+    new Path(agPath(attGroup), s"$WriterLeaseFile.claim.$token")
+
+  /** Atomic create-if-absent with the strongest primitive the root's
+    * FileSystem offers: HDFS/object-store creates with overwrite=false
+    * are exclusive server-side; Hadoop's LOCAL filesystems implement
+    * them as a check-then-act pair, so local roots (incl. re-schemed
+    * test roots) go through nio's O_EXCL createFile instead. Returns
+    * false when the path already exists (the caller lost the slot).
+    */
+  private def createExclusive(p: Path, body: String): Boolean =
+    graft.core.FsOps.createExclusive(fs, p, body)
 
   /** Atomic takeover of an expired/absent lease: CLAIM the bumped
     * fencing token by exclusive create of a token-named file. The
@@ -271,17 +279,7 @@ class BucketCatalog(spark: SparkSession, root: String,
     * reader refuses and only the stale reader advances, keeping the
     * one-winner-per-slot invariant. Returns the token won.
     */
-  /** Atomic create-if-absent with the strongest primitive the root's
-    * FileSystem offers: HDFS/object-store creates with overwrite=false
-    * are exclusive server-side; Hadoop's LOCAL filesystems implement
-    * them as a check-then-act pair, so local roots (incl. re-schemed
-    * test roots) go through nio's O_EXCL createFile instead. Returns
-    * false when the path already exists (the caller lost the slot).
-    */
-  private def createExclusive(p: Path, body: String): Boolean =
-    graft.core.FsOps.createExclusive(fs, p, body)
-
-  private[graft] def claimTakeover(scope: Option[String], expiredToken: Long): Long = {
+  private[graft] def claimTakeover(attGroup: String, expiredToken: Long): Long = {
     // per-ATTEMPT nonce, not just the writer id: contenders must be
     // distinguishable even inside one process, and the read-back
     // below re-checks authorship as a second fence behind the
@@ -290,9 +288,9 @@ class BucketCatalog(spark: SparkSession, root: String,
     val body = s"""{"writer": "${BucketCatalog.processWriterId}", """ +
       s""""nonce": "$nonce", "ts": ${System.currentTimeMillis()}}"""
     def lost(t: Long) = throw new IllegalStateException(
-      s"lost a writer-lease takeover race on ${leasePath(scope)}: " +
+      s"lost a writer-lease takeover race on ${leasePath(attGroup)}: " +
         s"token $t already claimed")
-    fs.mkdirs(scopeDir(scope))
+    fs.mkdirs(new Path(agPath(attGroup)))
     // SPENT claims (token <= the lease's) are swept on ENTRY, never by
     // their winner: a winner that deleted its own claim right after
     // the lease rewrite would recycle the token — a contender that
@@ -303,20 +301,20 @@ class BucketCatalog(spark: SparkSession, root: String,
     // next takeover (whose expiredToken is >= it) to collect it. The
     // 16-slot window matches the scan budget below.
     math.max(1L, expiredToken - 16).to(expiredToken).foreach(s =>
-      try fs.delete(claimPath(scope, s), false) catch { case NonFatal(_) => () })
+      try fs.delete(claimPath(attGroup, s), false) catch { case NonFatal(_) => () })
     var t = expiredToken + 1
     while (t <= expiredToken + 16) {
-      if (createExclusive(claimPath(scope, t), body)) {
+      if (createExclusive(claimPath(attGroup, t), body)) {
         // read-back arbitration: our nonce must be what the slot holds
         val ok =
-          try { val in = fs.open(claimPath(scope, t)); try om.readTree(in).get("nonce").asText() == nonce finally in.close() }
+          try { val in = fs.open(claimPath(attGroup, t)); try om.readTree(in).get("nonce").asText() == nonce finally in.close() }
           catch { case NonFatal(_) => false }
         if (!ok) lost(t)
         // stale claims we advanced past (creators died pre-rewrite)
         // are ours to clean; our OWN claim stays until the next
         // takeover's entry sweep (see above)
         (expiredToken + 1).to(t - 1).foreach(s =>
-          try fs.delete(claimPath(scope, s), false) catch { case NonFatal(_) => () })
+          try fs.delete(claimPath(attGroup, s), false) catch { case NonFatal(_) => () })
         return t
       } else {
         // claim exists: fresh -> lost the race; stale (creator died
@@ -324,26 +322,25 @@ class BucketCatalog(spark: SparkSession, root: String,
         // An unreadable claim falls back to file mtime so garbage
         // refuses while fresh but cannot wedge the slot forever.
         val ts =
-          try { val in = fs.open(claimPath(scope, t)); try om.readTree(in).get("ts").asLong() finally in.close() }
+          try { val in = fs.open(claimPath(attGroup, t)); try om.readTree(in).get("ts").asLong() finally in.close() }
           catch { case NonFatal(_) =>
-            try fs.getFileStatus(claimPath(scope, t)).getModificationTime
+            try fs.getFileStatus(claimPath(attGroup, t)).getModificationTime
             catch { case NonFatal(_) => System.currentTimeMillis() } }
         if (System.currentTimeMillis() - ts < leaseExpiryMs) lost(t)
       }
       t += 1
     }
     throw new IllegalStateException(
-      s"writer-lease takeover on ${leasePath(scope)} found " +
+      s"writer-lease takeover on ${leasePath(attGroup)} found " +
         s"${t - expiredToken - 1} stale claim slots — repair or remove " +
         s"$WriterLeaseFile.claim.* manually")
   }
 
-  /** Acquire or renew this process's writer lease for `scope` —
-    * Some(attGroup) for ordinary mutations (one lease PER GROUP, so
-    * ingest of different tables parallelizes across processes), None
-    * for root-scoped mutations (orphan sweep). The single-writer
-    * contract is ENFORCED (or at least loud) per scope on filesystems
-    * without byte-range locks. Rules:
+  /** Acquire or renew this process's writer lease on `attGroup` (one
+    * lease PER GROUP, so ingest of different tables parallelizes
+    * across processes). The single-writer contract is ENFORCED (or at
+    * least loud) per group on filesystems without byte-range locks.
+    * Rules:
     *  - our own lease renews (fresh `ts`, token unchanged); renewal
     *    I/O is skipped while the last renewal is younger than a
     *    quarter of the expiry, and a daemon HEARTBEAT re-renews every
@@ -352,35 +349,32 @@ class BucketCatalog(spark: SparkSession, root: String,
     *    merge commit is routine at 16k symbols) stays live instead of
     *    presenting as expired and getting superseded mid-commit;
     *  - a foreign lease younger than `leaseExpiryMs` REFUSES the
-    *    mutation (another live writer owns the scope);
+    *    mutation (another live writer owns the group);
     *  - an absent or expired lease is taken over with a BUMPED
     *    fencing token won atomically via [[claimTakeover]] (exclusive
     *    create of a token-named claim file — exactly one of N
     *    concurrent contenders wins, tokens are globally unique), then
     *    read back; the commit-time [[fenceWriterLease]] still guards
     *    the publish instant (storage-side CAS remains the
-    *    zero-window hook there). A group-lease takeover additionally
-    *    refuses while a live foreign ROOT lease exists: the root
-    *    lease means a root-scoped mutation (or a pre-split root-wide
-    *    writer) owns everything under it.
+    *    zero-window hook there).
     * Clock caveat: expiry compares wall clocks across writers, so the
     * contract assumes skew well under the expiry — the standard lease
     * assumption (e.g. Chubby §2.1's bounded clock drift).
     */
-  private def ensureWriterLease(scope: Option[String]): Unit =
-    leaseLock(scope).synchronized {
+  private def ensureWriterLease(attGroup: String): Unit =
+    leaseLock(attGroup).synchronized {
       // a mutation is arriving: stamp under the lease lock BEFORE the
       // fast path, so a heartbeat racing this acquisition (both
       // synchronize here) can never idle-release the lease between
       // this return and mutate()'s in-flight bookkeeping — that
       // release would fail the commit at the fence for no reason
-      BucketCatalog.leaseLastMutation.put(leaseKey(scope), System.nanoTime())
+      BucketCatalog.leaseLastMutation.put(leaseKey(attGroup), System.nanoTime())
       val renewNanos = leaseExpiryMs * 1000000L / 4
-      val cached = BucketCatalog.leases.get(leaseKey(scope))
+      val cached = BucketCatalog.leases.get(leaseKey(attGroup))
       if (cached != null && System.nanoTime() - cached._2 < renewNanos) ()
       else {
         val now = System.currentTimeMillis()
-        readLease(scope) match {
+        readLease(attGroup) match {
           // ts == 0 is an explicit RELEASE — an invitation for anyone
           // to take over. Our own released lease must NOT resurrect
           // via plain renewal (a foreign contender may be mid-takeover
@@ -389,51 +383,35 @@ class BucketCatalog(spark: SparkSession, root: String,
           // the takeover path, whose claim + belt re-read arbitrate.
           case Some((w, t, ts))
             if w == BucketCatalog.processWriterId && ts != 0L =>
-            writeLease(scope, t, overwrite = true)
-            BucketCatalog.leases.put(leaseKey(scope), (t, System.nanoTime()))
-            startHeartbeat(scope)
+            writeLease(attGroup, t, overwrite = true)
+            BucketCatalog.leases.put(leaseKey(attGroup), (t, System.nanoTime()))
+            startHeartbeat(attGroup)
           case Some((w, _, ts)) if now - ts < leaseExpiryMs =>
             throw new IllegalStateException(
               s"another writer ($w) holds a live lease on " +
-                s"${leasePath(scope)} (age ${now - ts} ms < expiry " +
+                s"${leasePath(attGroup)} (age ${now - ts} ms < expiry " +
                 s"$leaseExpiryMs ms); the catalog contract is a single " +
                 "writer per attribute group — point this writer at its " +
                 "own group or wait for the lease to expire")
           case other =>
-            // acquiring a GROUP lease defers to a live foreign ROOT
-            // lease: a root-scoped mutation (the destructive orphan
-            // sweep) — or a root written by the pre-split root-wide
-            // protocol — owns every group until it expires or is
-            // released (ts = 0). One small read, only on the takeover
-            // path, never on renewals.
-            if (scope.isDefined) readLease(None) match {
-              case Some((w, _, ts))
-                if w != BucketCatalog.processWriterId && now - ts < leaseExpiryMs =>
-                throw new IllegalStateException(
-                  s"another writer ($w) holds a live ROOT lease on $root " +
-                    s"(age ${now - ts} ms < expiry $leaseExpiryMs ms); a " +
-                    "root-scoped mutation owns all groups — wait for it " +
-                    "to finish or for the lease to expire")
-              case _ => ()
-            }
             // atomic takeover (r9): win the bumped token by exclusive
             // create of a claim file — the lease file is never
             // deleted, so exactly one of N contenders racing the same
             // expired state proceeds and a loser can never clobber
             // the winner's fresh lease (the old delete→create window).
-            val t = claimTakeover(scope, other.map(_._2).getOrElse(0L))
+            val t = claimTakeover(attGroup, other.map(_._2).getOrElse(0L))
             // belt to the claim's braces (r10): re-read the lease
             // right before rewriting it — if it changed since the
             // expired read (the old holder's late heartbeat revived
             // it), abort instead of clobbering a live writer.
-            if (readLease(scope) != other)
+            if (readLease(attGroup) != other)
               throw new IllegalStateException(
-                s"lost a writer-lease takeover race on ${leasePath(scope)}: " +
+                s"lost a writer-lease takeover race on ${leasePath(attGroup)}: " +
                   "the lease changed between the expired read and the claim")
-            try writeLease(scope, t, overwrite = other.isDefined)
+            try writeLease(attGroup, t, overwrite = other.isDefined)
             catch {
               case NonFatal(e) => throw new IllegalStateException(
-                s"writer-lease takeover on ${leasePath(scope)} won claim " +
+                s"writer-lease takeover on ${leasePath(attGroup)} won claim " +
                   s"$t but could not rewrite the lease: ${e.getMessage}", e)
             }
             // NOTE: the won claim file is NOT deleted here — deleting
@@ -441,28 +419,28 @@ class BucketCatalog(spark: SparkSession, root: String,
             // few ms late (same expired read, same claim name). The
             // next takeover's entry sweep collects it once the lease
             // token has moved past it.
-            readLease(scope) match {
+            readLease(attGroup) match {
               case Some((w2, t2, _))
                 if w2 == BucketCatalog.processWriterId && t2 == t =>
-                BucketCatalog.leases.put(leaseKey(scope), (t, System.nanoTime()))
-                startHeartbeat(scope)
+                BucketCatalog.leases.put(leaseKey(attGroup), (t, System.nanoTime()))
+                startHeartbeat(attGroup)
               case got =>
                 throw new IllegalStateException(
-                  s"lost a writer-lease takeover race on ${leasePath(scope)}: $got")
+                  s"lost a writer-lease takeover race on ${leasePath(attGroup)}: $got")
             }
         }
       }
     }
 
-  /** Register this scope's daemon lease renewer (once per process and
-    * scope): every quarter-expiry, while the leases map says we hold
+  /** Register this group's daemon lease renewer (once per process and
+    * group): every quarter-expiry, while the leases map says we hold
     * the lease, rewrite it with a fresh `ts` — unless the file shows a
     * foreign writer (we were superseded while idle: stop renewing and
     * drop the held entry so the next mutation refuses/fences cleanly).
     *
     * IDLE RELEASE (r11): a writer that touched a group once would
     * otherwise heartbeat it until process death, blocking foreign
-    * writers on that group for its whole lifetime. A scope with no
+    * writers on that group for its whole lifetime. A group with no
     * mutation IN FLIGHT and none ended within
     * [[BucketCatalog.IdleReleaseQuarters]] quarter-expiries is handed
     * back instead of renewed (the explicit ts = 0 release, so a
@@ -473,20 +451,20 @@ class BucketCatalog(spark: SparkSession, root: String,
     * renewal times — a multi-minute commit keeps its lease however
     * long its Spark jobs run. Never throws into the scheduler.
     */
-  private def startHeartbeat(scope: Option[String]): Unit = {
-    val key = leaseKey(scope)
+  private def startHeartbeat(attGroup: String): Unit = {
+    val key = leaseKey(attGroup)
     BucketCatalog.leaseHeartbeats.computeIfAbsent(key, _ =>
       BucketCatalog.leaseScheduler.scheduleWithFixedDelay(
-        () => leaseLock(scope).synchronized {
+        () => leaseLock(attGroup).synchronized {
           try {
             Option(BucketCatalog.leases.get(key)).foreach { case (t, _) =>
               if (BucketCatalog.idleBeyond(key,
                   leaseExpiryMs / 4 * BucketCatalog.IdleReleaseQuarters))
-                releaseWriterLease(scope)
-              else readLease(scope) match {
+                releaseWriterLease(attGroup)
+              else readLease(attGroup) match {
                 case Some((w, t2, _))
                   if w == BucketCatalog.processWriterId && t2 == t =>
-                  writeLease(scope, t, overwrite = true)
+                  writeLease(attGroup, t, overwrite = true)
                   BucketCatalog.leases.put(key, (t, System.nanoTime()))
                 case _ => BucketCatalog.leases.remove(key)
               }
@@ -498,23 +476,24 @@ class BucketCatalog(spark: SparkSession, root: String,
     ()
   }
 
-  /** Hand the scope's lease back (root-scoped mutations release on
-    * completion so group writers don't wait out a full expiry): stop
-    * the heartbeat, drop the held entry, and stamp the lease file
-    * ts = 0 — always-expired with the token PRESERVED, so the next
-    * acquirer takes over monotonically (bump via claim) instead of
-    * bootstrapping. No-op if we don't hold it.
+  /** Hand the group's lease back (the idle heartbeat, and the orphan
+    * sweep for a lease it took only to sweep, so a foreign writer need
+    * not wait out a full expiry): stop the heartbeat, drop the held
+    * entry, and stamp the lease file ts = 0 — always-expired with the
+    * token PRESERVED, so the next acquirer takes over monotonically
+    * (bump via claim) instead of bootstrapping. No-op if we don't
+    * hold it.
     */
-  private def releaseWriterLease(scope: Option[String]): Unit =
-    leaseLock(scope).synchronized {
-      val key = leaseKey(scope)
+  private def releaseWriterLease(attGroup: String): Unit =
+    leaseLock(attGroup).synchronized {
+      val key = leaseKey(attGroup)
       Option(BucketCatalog.leaseHeartbeats.remove(key)).foreach(_.cancel(false))
       val held = Option(BucketCatalog.leases.remove(key)).map(_._1)
       held.foreach { t =>
-        readLease(scope) match {
+        readLease(attGroup) match {
           case Some((w, t2, _))
             if w == BucketCatalog.processWriterId && t2 == t =>
-            try writeLease(scope, t, overwrite = true, release = true)
+            try writeLease(attGroup, t, overwrite = true, release = true)
             catch { case NonFatal(_) => () } // expiry still unblocks
           case _ => () // superseded while idle — nothing ours to release
         }
@@ -535,14 +514,14 @@ class BucketCatalog(spark: SparkSession, root: String,
     * writers live, entering this window at all requires a writer
     * stalled for a full expiry that wakes in exactly that instant.
     */
-  private def fenceWriterLease(scope: Option[String]): Unit = {
-    val held = Option(BucketCatalog.leases.get(leaseKey(scope))).map(_._1)
-    readLease(scope) match {
+  private def fenceWriterLease(attGroup: String): Unit = {
+    val held = Option(BucketCatalog.leases.get(leaseKey(attGroup))).map(_._1)
+    readLease(attGroup) match {
       case Some((w, t, _))
         if w == BucketCatalog.processWriterId && held.contains(t) => ()
       case got =>
         throw new IllegalStateException(
-          s"writer lease on ${leasePath(scope)} lost before manifest " +
+          s"writer lease on ${leasePath(attGroup)} lost before manifest " +
             s"publish (held token $held, found $got); commit fenced — " +
             "another writer superseded this process")
     }
@@ -810,8 +789,9 @@ class BucketCatalog(spark: SparkSession, root: String,
   /** Recursive walk of `k=v` partition directories under `base`,
     * yielding (leaf partition rel path, file) pairs — the
     * `timeframe=T/year=Y/sbucket=B` leaves of a group or of a staging
-    * dir. Engine dirs (`_graft_*`) and dot/underscore files never
-    * match.
+    * dir. Only `k=v` dirs are entered, so a group's engine dirs
+    * (`_graft_*`) and its `.staging_*` dirs are never walked, and
+    * dot/underscore files never match.
     */
   private def walkPartitionFiles(base: Path): Seq[(String, Path)] = {
     def rec(dir: Path, rel: String): Seq[(String, Path)] =
@@ -1016,12 +996,11 @@ class BucketCatalog(spark: SparkSession, root: String,
       try fs.delete(new Path(dir, s".${tmp.getName}.crc"), false)
       catch { case NonFatal(_) => () }
     }
-    // the slot CAS itself is the shared no-overwrite rename (see
-    // FsOps.renameNoOverwrite for the per-FileSystem requirements); a
-    // storage error with no destination present throws from there —
-    // drop the loser tmp before letting it propagate
     // the slot CAS (and the checksummed-fs .crc-twin carry on a win)
-    // is the shared no-overwrite rename
+    // is the shared no-overwrite rename (see FsOps.renameNoOverwrite
+    // for the per-FileSystem requirements); a storage error with no
+    // destination present throws from there — drop the loser tmp
+    // before letting it propagate
     val renamed =
       try graft.core.FsOps.renameNoOverwrite(fs, tmp, dst)
       catch { case e: java.io.IOException => dropTmp(); throw e }
@@ -1087,7 +1066,7 @@ class BucketCatalog(spark: SparkSession, root: String,
     // the manifest flip is the commit point: on lease-guarded roots a
     // superseded writer must be stopped HERE, before its staged files
     // can become visible
-    if (!rootIsLocalFs) fenceWriterLease(Some(attGroup))
+    if (!rootIsLocalFs) fenceWriterLease(attGroup)
     val (prevV, prev, prevBuckets, prevRanges) = resolveCurrent(attGroup)
     val (dead, kept) = prev.partition(f =>
       replacedParts.contains(partOf(f)) || removedFiles.contains(f))
@@ -1182,11 +1161,19 @@ class BucketCatalog(spark: SparkSession, root: String,
   }
 
   /** Stage-and-commit shared by every write path: materialize `df`
-    * fully into a staging directory, move each staged file (Spark part
-    * file names are job-unique) into its live partition directory,
-    * then flip the manifest — see the class doc's snapshot-isolation
-    * contract. A mid-move crash leaves unreferenced files that the
-    * next [[recoverOrphanedStaging]] sweeps; the live snapshot is
+    * fully into a staging directory inside the group
+    * (`<ag>/.staging_<nanos>`), move each staged file (Spark part file
+    * names are job-unique) into its live partition directory, then
+    * flip the manifest — see the class doc's snapshot-isolation
+    * contract. The staging dir's name has no `=`, so the partition
+    * walks never enter it and readers, which open only manifest-listed
+    * files, never see it. Writing into a staging dir rather than into
+    * the group's partition dirs also keeps Spark's post-write recache,
+    * which refreshes every cached plan reading under the output path,
+    * off a caller's persisted input over the same group (one Spark job
+    * per commit, measured). A mid-move crash
+    * leaves unreferenced files and a staging dir that the next
+    * [[recoverOrphanedStaging]] sweeps; the live snapshot is
     * never touched until the manifest rename. Partitions in
     * `clearIfUnstaged` that produced no staged output leave the live
     * set (a rewrite that emptied them). `knownRanges` gives the exact
@@ -1200,7 +1187,7 @@ class BucketCatalog(spark: SparkSession, root: String,
       appendParts: Set[String] = Set.empty,
       knownRanges: Map[String, Long] = Map.empty): Unit = {
     val groupDir = agPath(attGroup)
-    val staging = new Path(root, s"$StagingPrefix${attGroup}_${System.nanoTime()}")
+    val staging = new Path(groupDir, s"$StagingPrefix${System.nanoTime()}")
     // repartition on the partition key so the staged write spreads
     // file creation across the executors: without it a dynamic
     // partition write funnels through the input's few tasks and the
@@ -1325,108 +1312,49 @@ class BucketCatalog(spark: SparkSession, root: String,
       } finally r.close()
     } catch { case NonFatal(_) => None }
 
-  /** Clean up after a crashed writer: delete orphaned staging
-    * directories, plus any data file no retained manifest references
+  /** Clean up after a crashed writer: in each group, delete its
+    * staging dirs and any data file no retained manifest references
     * (a crash between the file moves and the manifest flip leaves
     * such unreferenced files; they were never part of any snapshot).
-    * Safe ONLY at writer startup under the catalog's cross-process
-    * writer guard (the reference has the same: one server process
-    * owns the store and replays/cleans its WAL on startup,
-    * executor/wal.go:29-45). Under the per-group lease protocol the
-    * sweep is scoped: each group is swept under ITS lease, and a
-    * group whose lease a live foreign writer holds is SKIPPED — its
-    * staging is that writer's in-flight commit, not an orphan.
-    * Returns the number of staging directories removed.
+    * The reference replays and cleans its WAL on startup under its one
+    * writer lock (executor/wal.go:29-45); here each group is swept as
+    * one mutation of that group — the in-process lock, so a same-JVM
+    * commit in flight finishes first, plus the OS lock or the group
+    * lease. A group held by a live foreign writer (its lease, or the
+    * root's OS lock) is SKIPPED: its staging is that writer's
+    * in-flight commit, not an orphan. A group lease taken only for
+    * the sweep is handed back (ts = 0). Returns the number of staging
+    * directories removed.
     */
-  def recoverOrphanedStaging(): Int = {
-    // destructive sweep — MUST hold the cross-process writer guard: a
-    // startup sweep racing another process's mid-commit moves would
-    // delete files whose manifest flip hasn't landed yet. Same guard
-    // pair as mutate: OS lock on local roots (root-wide, so the whole
-    // sweep is covered), writer LEASE elsewhere — a sweep that
-    // skipped the lease would be exactly the second writer the lease
-    // exists to refuse. Unlike ordinary mutations, the lease check
-    // here must NOT be satisfied from the renewal cache: a writer
-    // stalled past its expiry and superseded could wake with a
-    // fresh-looking cache entry and sweep the NEW writer's mid-commit
-    // staging — so fence against the lease FILE, exactly as commits
-    // do, before deleting anything. The ROOT lease held for the
-    // sweep's duration also blocks NEW group-lease acquisitions
-    // (takeovers defer to it), and is released — not expiry-waited —
-    // on the way out.
-    if (rootIsLocalFs) BucketCatalog.acquireProcessLock(root, rootIsLocalFs)
-    else { ensureWriterLease(None); fenceWriterLease(None) }
-    // the sweep is a MUTATION for the heartbeat's idle-release
-    // bookkeeping: without the in-flight mark, a sweep outlasting
-    // IdleReleaseQuarters quiet quarters would have its root (and
-    // swept-group) leases handed back MID-SWEEP — exactly the foreign
-    //-writer window the destructive pass must exclude
-    if (!rootIsLocalFs) BucketCatalog.noteMutationStart(leaseKey(None))
-    // group leases taken only FOR the sweep are handed back (ts = 0)
-    // in the finally — ON EVERY EXIT PATH: a sweep that threw
-    // mid-pass must not leave heartbeats renewing leases on groups
-    // this process may never write, or every other process is locked
-    // out of them until this JVM dies
-    val acquiredForSweep = scala.collection.mutable.Set[String]()
-    val held = scala.collection.mutable.Set[String]()
-    try {
-      val p = new Path(root)
-      if (!fs.exists(p)) return 0
-      val ags = listAttGroups()
-      // per-group sweep under each group's OWN lease; a group owned by
-      // a live foreign writer is skipped wholesale
-      ags.foreach { ag =>
-        val hadBefore = rootIsLocalFs ||
-          BucketCatalog.leases.containsKey(leaseKey(Some(ag)))
-        val owned = rootIsLocalFs ||
-          (try { ensureWriterLease(Some(ag)); fenceWriterLease(Some(ag)); true }
-           catch { case _: IllegalStateException => false })
-        if (owned) {
-          held += ag
-          // in-flight mark per held group: the staging-dir pass at the
-          // end still relies on this lease, and a multi-minute sweep
-          // must not have it idle-released out from under it
-          if (!rootIsLocalFs) BucketCatalog.noteMutationStart(leaseKey(Some(ag)))
-          if (!hadBefore) acquiredForSweep += ag
-          // a group with no manifest references nothing: a crash inside
-          // its first commit leaves files that are all orphans
-          val referenced = referencedFiles(ag)
-          dataFilesOnDisk(ag).filterNot(referenced).foreach { rel =>
-            try fs.delete(new Path(agPath(ag), rel), false)
-            catch { case NonFatal(e) =>
-              log.warn(s"orphan sweep of $ag/$rel failed: ${e.getMessage}")
-            }
+  def recoverOrphanedStaging(): Int =
+    listAttGroups().map { ag =>
+      val hadLease = rootIsLocalFs || BucketCatalog.leases.containsKey(leaseKey(ag))
+      try mutate(ag) {
+        // the renewal cache is not proof of ownership: a writer stalled
+        // past its expiry and superseded could wake with a
+        // fresh-looking cache entry and sweep the NEW writer's
+        // mid-commit files — so fence against the lease FILE, exactly
+        // as commits do, before deleting anything
+        if (!rootIsLocalFs) fenceWriterLease(ag)
+        // a group with no manifest references nothing: a crash inside
+        // its first commit leaves files that are all orphans
+        val referenced = referencedFiles(ag)
+        dataFilesOnDisk(ag).filterNot(referenced).foreach { rel =>
+          try fs.delete(new Path(agPath(ag), rel), false)
+          catch { case NonFatal(e) =>
+            log.warn(s"orphan sweep of $ag/$rel failed: ${e.getMessage}")
           }
-        } else log.warn(
-          s"orphan sweep skipping $ag — a live foreign writer holds its lease")
-      }
-      // root staging dirs (named .staging_<ag>_<nanos>): owner = the
-      // longest listed group whose name prefixes the dir (group names
-      // may themselves contain '_'); swept only when that group's
-      // lease is held. A dir matching NO live group (group destroyed,
-      // or a crash before create) is swept once older than the lease
-      // expiry — the age floor keeps a brand-new group's first commit,
-      // racing this sweep, intact.
-      val orphans = fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(StagingPrefix))
-      val swept = orphans.filter { s =>
-        val name = s.getPath.getName.stripPrefix(StagingPrefix)
-        ags.filter(ag => name.startsWith(ag + "_")).sortBy(-_.length).headOption match {
-          case Some(ag) => rootIsLocalFs || held(ag)
-          case None => rootIsLocalFs ||
-            System.currentTimeMillis() - s.getModificationTime > leaseExpiryMs
         }
-      }
-      swept.foreach(s => fs.delete(s.getPath, true))
-      swept.size
-    } finally if (!rootIsLocalFs) {
-      held.foreach(ag => BucketCatalog.noteMutationEnd(leaseKey(Some(ag))))
-      BucketCatalog.noteMutationEnd(leaseKey(None))
-      acquiredForSweep.foreach(ag =>
-        try releaseWriterLease(Some(ag)) catch { case NonFatal(_) => () })
-      releaseWriterLease(None)
-    }
-  }
+        val staging = fs.listStatus(new Path(agPath(ag))).toSeq
+          .filter(s => s.isDirectory && s.getPath.getName.startsWith(StagingPrefix))
+        staging.foreach(s => fs.delete(s.getPath, true))
+        staging.size
+      } catch { case e: IllegalStateException =>
+        log.warn(s"orphan sweep skipping $ag — ${e.getMessage}")
+        0
+      } finally if (!hadLease)
+        try releaseWriterLease(ag) catch { case NonFatal(_) => () }
+    }.sum
 
   // --------------------------------------------------------------- reads
 
@@ -1831,9 +1759,8 @@ object BucketCatalog {
   }
 
   /** True iff the key has no mutation in flight and the last one ended
-    * more than `idleMs` ago. A key with NO bookkeeping (a lease
-    * acquired outside [[BucketCatalog.mutate]] — the root-scoped sweep,
-    * which releases explicitly) is never idle-released.
+    * more than `idleMs` ago. A key with NO bookkeeping (no mutation
+    * has ended on it yet) is never idle-released.
     */
   private[catalog] def idleBeyond(key: String, idleMs: Long): Boolean = {
     val active = Option(leaseActiveMutations.get(key)).exists(_.get > 0)

@@ -548,7 +548,7 @@ class CatalogSpec extends SparkSpec {
     // letting this racer re-win token 6 and clobber the fresh lease
     val late = new BucketCatalog(spark, "nolock:" + root2)
     val eLate = intercept[IllegalStateException] {
-      late.claimTakeover(Some("LSE"), 5L)
+      late.claimTakeover("LSE", 5L)
     }
     assert(eLate.getMessage.contains("takeover race"), eLate.getMessage)
     val (w2b, t2b) = readAgLease(root2, "LSE")
@@ -569,23 +569,15 @@ class CatalogSpec extends SparkSpec {
     // lease and SKIPS a group whose lease a live foreign writer holds
     // — the usurper's mid-commit staging survives, no exception
     val usurperStaging = java.nio.file.Paths.get(
-      root2, BucketCatalog.StagingPrefix + "LSE_mid_commit")
+      root2, "LSE", BucketCatalog.StagingPrefix + "mid_commit")
     Files.createDirectory(usurperStaging)
     assert(cat2.recoverOrphanedStaging() == 0,
       "a group held by a live foreign writer must be skipped, not swept")
     assert(Files.exists(usurperStaging),
       "the sweep must not delete the new writer's staging")
-    // a staging dir matching NO live group is age-gated: younger than
-    // the lease expiry survives (it may be a brand-new group's first
-    // commit racing this sweep)
-    val unmatched = java.nio.file.Paths.get(
-      root2, BucketCatalog.StagingPrefix + "GONE_mid_commit")
-    Files.createDirectory(unmatched)
-    assert(cat2.recoverOrphanedStaging() == 0)
-    assert(Files.exists(unmatched), "fresh unmatched staging must survive")
   }
 
-  test("per-group leases: writers on different groups of one root proceed in parallel; a root lease blocks group takeovers") {
+  test("per-group leases: writers on different groups of one root proceed in parallel; a lease taken only for the sweep is handed back") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.nolock.impl", classOf[NoLockFileSystem].getName)
     val batch = Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close")
@@ -603,50 +595,17 @@ class CatalogSpec extends SparkSpec {
       cat.write(TimeBucketKey.parse("AAPL/1Min/NYSE"), batch)
     }
     assert(e.getMessage.contains("live lease"), e.getMessage)
-    // a live foreign ROOT lease (a root-scoped mutation in flight, or
-    // a root written by the pre-split protocol) blocks NEW group
-    // acquisitions...
+    // a group this process holds no lease on (created through a local
+    // root, which takes the OS lock instead): the sweep acquires its
+    // lease only to sweep and hands it back (ts = 0) on the way out,
+    // so a foreign writer never waits out an expiry for it
     val root2 = freshRoot()
-    Files.writeString(
-      java.nio.file.Paths.get(root2, BucketCatalog.WriterLeaseFile),
-      s"""{"writer": "sweeper", "token": 2, "ts": ${System.currentTimeMillis()}}""")
-    val cat2 = new BucketCatalog(spark, "nolock:" + root2)
-    val e2 = intercept[IllegalStateException] {
-      cat2.write(TimeBucketKey.parse("AAPL/1Min/LSE"), batch)
-    }
-    assert(e2.getMessage.contains("ROOT lease"), e2.getMessage)
-    // ...and a RELEASED root lease (ts = 0 — what the sweep writes on
-    // completion) unblocks them immediately, no expiry wait
-    Files.writeString(
-      java.nio.file.Paths.get(root2, BucketCatalog.WriterLeaseFile),
-      s"""{"writer": "sweeper", "token": 2, "ts": 0}""")
-    val lse2 = TimeBucketKey.parse("AAPL/1Min/LSE")
-    cat2.create(lse2, ohlcv, isVariable = false)
-    cat2.write(lse2, batch)
-    assert(cat2.read(lse2).count() == 1)
-    // the sweep itself releases its root lease on the way out: run one
-    // and check the file is handed back (ts = 0, token preserved)
-    val root3 = freshRoot()
-    val cat3 = new BucketCatalog(spark, "nolock:" + root3)
-    val lse3 = TimeBucketKey.parse("AAPL/1Min/LSE")
-    cat3.create(lse3, ohlcv, isVariable = false)
-    cat3.write(lse3, batch)
-    cat3.recoverOrphanedStaging()
-    val n3 = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
-      Files.readString(
-        java.nio.file.Paths.get(root3, BucketCatalog.WriterLeaseFile)))
-    assert(n3.get("ts").asLong() == 0L,
-      "the sweep must hand back its root lease (ts = 0)")
-    // our OWN released lease must not resurrect via plain renewal — a
-    // foreign contender may legitimately be mid-takeover on it; the
-    // re-acquire goes through the claim path and BUMPS the token
-    val tok3 = n3.get("token").asLong()
-    cat3.recoverOrphanedStaging()
-    val n3b = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
-      Files.readString(
-        java.nio.file.Paths.get(root3, BucketCatalog.WriterLeaseFile)))
-    assert(n3b.get("token").asLong() == tok3 + 1 && n3b.get("ts").asLong() == 0L,
-      s"re-acquiring a released lease must bump the fencing token: $n3b")
+    new BucketCatalog(spark, root2).create(lse, ohlcv, isVariable = false)
+    new BucketCatalog(spark, "nolock:" + root2).recoverOrphanedStaging()
+    val n2 = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      Files.readString(agLease(root2, "LSE")))
+    assert(n2.get("ts").asLong() == 0L,
+      s"the sweep must hand back a group lease it took only to sweep: $n2")
   }
 
   test("idle group lease is handed back by the heartbeat; re-acquire goes through the takeover path with a bumped token") {
@@ -714,7 +673,7 @@ class CatalogSpec extends SparkSpec {
       val cat = new BucketCatalog(spark, "nolock:" + root)
       new Thread(() => {
         barrier.await()
-        try results.add(Right(cat.claimTakeover(Some("NYSE"), 5L)))
+        try results.add(Right(cat.claimTakeover("NYSE", 5L)))
         catch { case e: IllegalStateException => results.add(Left(e.getMessage)) }
       })
     }
@@ -736,7 +695,7 @@ class CatalogSpec extends SparkSpec {
     Files.writeString(staleClaim,
       s"""{"writer": "crashed-claimant", "ts": $expired}""")
     val cat2 = new BucketCatalog(spark, "nolock:" + root2)
-    assert(cat2.claimTakeover(Some("NYSE"), 5L) == 7L,
+    assert(cat2.claimTakeover("NYSE", 5L) == 7L,
       "stale claim slot must be skipped")
     assert(!Files.exists(staleClaim), "stale claim must be swept by the winner")
     // SPENT claims (token <= the lease's) are collected by the NEXT
@@ -746,7 +705,7 @@ class CatalogSpec extends SparkSpec {
       root2, "NYSE", BucketCatalog.WriterLeaseFile + ".claim.4")
     Files.writeString(spentClaim,
       s"""{"writer": "long-gone", "ts": $expired}""")
-    assert(cat2.claimTakeover(Some("NYSE"), 7L) == 8L)
+    assert(cat2.claimTakeover("NYSE", 7L) == 8L)
     assert(!Files.exists(spentClaim),
       "spent claims below the lease token must be swept on takeover entry")
     // ... but a FRESH claim (live contender mid-takeover) refuses
@@ -757,7 +716,7 @@ class CatalogSpec extends SparkSpec {
         BucketCatalog.WriterLeaseFile + ".claim.6"),
       s"""{"writer": "live-claimant", "ts": ${System.currentTimeMillis()}}""")
     val e = intercept[IllegalStateException] {
-      new BucketCatalog(spark, "nolock:" + root3).claimTakeover(Some("NYSE"), 5L)
+      new BucketCatalog(spark, "nolock:" + root3).claimTakeover("NYSE", 5L)
     }
     assert(e.getMessage.contains("takeover race"), e.getMessage)
     // end-to-end: a real mutation through the winning path still works
@@ -1008,7 +967,7 @@ class CatalogSpec extends SparkSpec {
     assert(cat.manifestVersions("OHLCV") == Seq(1L, 2L, 3L))
 
     // simulate a writer that crashed mid-stage: an orphan staging dir
-    val orphan = java.nio.file.Path.of(root, ".staging_OHLCV_123")
+    val orphan = java.nio.file.Path.of(root, "OHLCV", ".staging_123")
     java.nio.file.Files.createDirectories(orphan)
     java.nio.file.Files.writeString(orphan.resolve("junk"), "x")
     assert(cat.recoverOrphanedStaging() == 1)
@@ -1079,6 +1038,58 @@ class CatalogSpec extends SparkSpec {
     assert(new graft.catalog.ReplicaSync(spark, root, replicaRoot).sync() == 2)
     assert(entries(replicaRoot) == groups)
     assert(entries(root) == groups)
+  }
+
+  test("the orphan sweep never touches an in-flight commit: staging sits inside the group and the sweep waits behind the commit") {
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.latch.impl", classOf[LatchFileSystem].getName)
+    val bare = freshRoot()
+    val cat = new BucketCatalog(spark, "latch:" + bare)
+    val ag = "LATCH"
+    def bars(e: Long) = Seq(("AAPL", e, e.toDouble)).toDF("symbol", "Epoch", "V")
+    def entries(dir: java.nio.file.Path) =
+      Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
+    def stagingIn(dir: java.nio.file.Path) =
+      entries(dir).filter(_.startsWith(BucketCatalog.StagingPrefix))
+    cat.writeMulti(ag, "1Min", bars(60L))
+    // hold the next commit's staged write in flight at its first part file
+    LatchFileSystem.arm()
+    val write = new java.util.concurrent.CompletableFuture[Unit]()
+    val writer = new Thread(() =>
+      try { cat.writeMulti(ag, "1Min", bars(120L)); write.complete(()) }
+      catch { case t: Throwable => write.completeExceptionally(t) })
+    // the sweep runs through a second catalog that spells the same
+    // root differently: same-JVM catalogs on one directory share its
+    // group locks however they name it
+    val sweepCat = new BucketCatalog(spark, "latch://" + bare)
+    val sweep = new java.util.concurrent.CompletableFuture[Int]()
+    val sweeper = new Thread(() =>
+      try sweep.complete(sweepCat.recoverOrphanedStaging())
+      catch { case t: Throwable => sweep.completeExceptionally(t) })
+    try {
+      writer.start()
+      assert(LatchFileSystem.awaitEntered(60000L), "the staged write never started")
+      val groupDir = java.nio.file.Path.of(bare, ag)
+      // the in-flight commit stages inside its own group: the root
+      // holds only group dirs
+      assert(entries(java.nio.file.Path.of(bare)) == Set(ag))
+      assert(stagingIn(groupDir).size == 1, s"group entries: ${entries(groupDir)}")
+      // the sweep is a mutation of the group, so it waits behind the
+      // in-flight commit instead of deleting its staging dir
+      sweeper.start()
+      Thread.sleep(1000L)
+      assert(!sweep.isDone, s"the sweep returned mid-commit: $sweep")
+      LatchFileSystem.release()
+      write.get(120, java.util.concurrent.TimeUnit.SECONDS)
+      assert(cat.read(TimeBucketKey.parse(s"AAPL/1Min/$ag")).select("Epoch").orderBy("Epoch")
+        .collect().map(_.getLong(0)).toSeq == Seq(60L, 120L))
+      assert(sweep.get(120, java.util.concurrent.TimeUnit.SECONDS) == 0)
+      assert(stagingIn(groupDir).isEmpty, s"group entries: ${entries(groupDir)}")
+    } finally {
+      LatchFileSystem.release()
+      writer.join(120000L); sweeper.join(120000L)
+    }
   }
 
   test("local-ness probe survives RawLocalFileSystem (getScheme is unimplemented there)") {
